@@ -31,6 +31,7 @@ from auto_trade_data_pipeline_spark.operators.windows import (
     with_session_flags,
     with_volume_spike,
 )
+from auto_trade_data_pipeline_spark.schemas import SchemaMismatchError
 from auto_trade_data_pipeline_spark.sources import N_TICK_SYMBOLS, ticks_from_events
 
 
@@ -1527,6 +1528,14 @@ def full_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         + ["rolling_avg_volume", "is_volume_spike"]
     )
     ordered = candle_cols + native_cols + [name for name, _t in INDICATOR_COLUMNS]
+    if set(ordered) != set(e.columns):
+        # The projection is hard-coded: a family that gains, drops or
+        # renames a column must fail here, not lose it silently.
+        raise SchemaMismatchError(
+            "full_enrichment: output column drift; missing "
+            f"{sorted(set(ordered) - set(e.columns))}, "
+            f"unprojected {sorted(set(e.columns) - set(ordered))}"
+        )
     ts_cols = {"timestamp", "local_timestamp"}
     doubles = {f.name for f in e.schema.fields if f.dataType.typeName() == "double"}
     sel = []

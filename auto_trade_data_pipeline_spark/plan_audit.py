@@ -32,7 +32,9 @@ corpus-wide by tests/test_plans.py's streaming sibling sweep).
 from __future__ import annotations
 
 import re
+from collections import Counter
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 #: Node classes that bound the row count of everything above them.
@@ -53,7 +55,7 @@ _BOUNDING = frozenset(
 _WINDOW_NODES = frozenset({"WindowExec", "WindowInPandasExec", "WindowGroupLimitExec"})
 
 
-def _walk(jplan, subqueries: bool = True):
+def _walk(jplan, subqueries: bool = True, seen: set[int] | None = None):
     """Depth-first over the physical plan, descending through the
     subtrees a plain children() walk misses (round-6 advice): nested
     AdaptiveSparkPlanExec (initialPlan), the cached plan behind an
@@ -67,21 +69,52 @@ def _walk(jplan, subqueries: bool = True):
     plan that merely references it (a scalar-subquery filter under an
     unpartitioned window must not whitelist that window), while AQE
     initialPlan and the cached InMemoryTableScan plan ARE the
-    row-producing dataflow and stay in both walks."""
+    row-producing dataflow and stay in both walks.
+
+    With a ``seen`` set the walk descends into each cache once, however
+    many InMemoryTableScans read it — across every walk sharing the
+    set: the plan as it executes, where the cache is built once."""
     yield jplan
     name = jplan.getClass().getSimpleName()
     if name == "AdaptiveSparkPlanExec":
-        yield from _walk(jplan.initialPlan(), subqueries)
+        yield from _walk(jplan.initialPlan(), subqueries, seen)
         return
     if name == "InMemoryTableScanExec":
-        yield from _walk(jplan.relation().cachedPlan(), subqueries)
+        cached = jplan.relation().cachedPlan()
+        if seen is None:
+            yield from _walk(cached, subqueries)
+        elif (key := cache_id(jplan)) not in seen:
+            seen.add(key)
+            yield from _walk(cached, subqueries, seen)
     if subqueries:
         subs = jplan.subqueries()
         for i in range(subs.size()):
-            yield from _walk(subs.apply(i), subqueries)
+            yield from _walk(subs.apply(i), subqueries, seen)
     children = jplan.children()
     for i in range(children.size()):
-        yield from _walk(children.apply(i), subqueries)
+        yield from _walk(children.apply(i), subqueries, seen)
+
+
+def cache_id(scan) -> int:
+    """Identity of the cache an InMemoryTableScanExec reads: every scan
+    of one cache entry shares its ``CachedRDDBuilder``."""
+    return SparkContext._jvm.System.identityHashCode(scan.relation().cacheBuilder())
+
+
+def file_scans(jplans) -> Counter[str]:
+    """FileSourceScanExec count per scanned path (the last element of
+    each root path, e.g. ``lineitem.parquet``) over the physical plans
+    ``jplans``, each cache counted once however many of them read it:
+    how often each file is read when the plans run one after another
+    and share their caches."""
+    seen: set[int] = set()
+    out: Counter[str] = Counter()
+    for jplan in jplans:
+        for node in _walk(jplan, seen=seen):
+            if node.getClass().getSimpleName() == "FileSourceScanExec":
+                paths = node.relation().location().rootPaths()
+                out[",".join(paths.apply(i).getName() for i in range(paths.size()))] += 1
+    return out
 
 
 def _offenders(jplan) -> list[str]:

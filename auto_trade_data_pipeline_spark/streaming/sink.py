@@ -137,6 +137,16 @@ def committed_batches(path: str) -> set[int]:
     return _MarkerStore(path).committed()
 
 
+def _skip(batch_df: DataFrame) -> bool:
+    """Skip an already-committed batch, but still run it (to the
+    ``noop`` sink): a stateful stream commits its state stores only
+    when the batch's plan executes, and a batch left unexecuted fails
+    the query (``STATE_STORE_COMMIT_VALIDATION_FAILED``). That happens
+    when a fresh checkpoint replays batch ids whose markers survive."""
+    batch_df.write.mode("overwrite").format("noop").save()
+    return False
+
+
 def apply_upsert_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -145,11 +155,12 @@ def apply_upsert_batch(
     order_col: str,
 ) -> bool:
     """Apply one micro-batch: skip if ``batch_id`` is already
-    committed, else keyed-upsert the rows and write the commit marker.
-    Returns True if the batch was applied, False if skipped."""
+    committed (the batch still runs, to the ``noop`` sink; see
+    :func:`_skip`), else keyed-upsert the rows and write the commit
+    marker. Returns True if the batch was applied, False if skipped."""
     store = _MarkerStore(path, spark=batch_df.sparkSession)
     if store.exists(batch_id):
-        return False
+        return _skip(batch_df)
     write_upsert_snapshot(batch_df, path, keys, order_col)
     store.commit(batch_id)
     return True
@@ -188,7 +199,7 @@ def apply_cdc_batch(
 
     store = _MarkerStore(path, spark=batch_df.sparkSession)
     if store.exists(batch_id):
-        return False
+        return _skip(batch_df)
     write_cdc_snapshot(batch_df, path, keys, order_col, op_col=op_col)
     store.commit(batch_id)
     return True

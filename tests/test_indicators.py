@@ -353,6 +353,19 @@ def test_full_enrichment_carries_the_complete_surface(spark, sf_small):
     assert df.limit(5).count() == 5
 
 
+def test_full_enrichment_rejects_column_drift(spark, sf_small, monkeypatch):
+    """The hard-coded output projection refuses, by name, a column set
+    that no longer matches the enriched table's."""
+    from auto_trade_data_pipeline_spark.corpus import indicators as corpus_ind
+    from auto_trade_data_pipeline_spark.schemas import SchemaMismatchError
+
+    monkeypatch.setattr(
+        corpus_ind, "INDICATOR_COLUMNS", (*corpus_ind.INDICATOR_COLUMNS, ("ghost", "double"))
+    )
+    with pytest.raises(SchemaMismatchError, match="ghost"):
+        corpus_ind.full_enrichment(spark, sf_small)
+
+
 GOLDEN_HASHES = {
     # sha256[:16] of the round-8 output arrays on the seed-42 series —
     # pinned so any silent change to the TA algorithms fails loudly

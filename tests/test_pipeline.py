@@ -1,12 +1,24 @@
 """End-to-end pipeline: the three reference stages as one job, with
-checkpointed outputs round-tripping."""
+checkpointed outputs round-tripping, and the one candle table that
+every derived output reads."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from auto_trade_data_pipeline_spark import cache_scope
 from auto_trade_data_pipeline_spark.pipeline import run_batch_pipeline
+from auto_trade_data_pipeline_spark.plan_audit import _walk, cache_id, file_scans
 from auto_trade_data_pipeline_spark.sources import ticks_from_events
+
+
+def _run(result) -> None:
+    for df in (result.invalid_ticks, result.candles, result.calculated, result.anchors):
+        df.write.mode("overwrite").format("noop").save()
+
+
+def _cached_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
 
 
 def test_batch_pipeline_end_to_end(spark, sf_small, tmp_path):
@@ -35,3 +47,64 @@ def test_batch_pipeline_end_to_end(spark, sf_small, tmp_path):
         spark.read.parquet(str(tmp_path / "out/anchored_vwap_points_1s")).count()
         == out.anchors.count()
     )
+    out.candles.unpersist()
+
+
+def test_candles_materialized_once_and_shared(spark, sf_small):
+    """Every candle consumer reads one cached candle relation: over the
+    executed plans of ``candles``, ``calculated`` and ``anchors`` (the
+    points kernel and the VWAP fill both read candles) the events table
+    is scanned once, inside the cache ``candles`` itself reads. Without
+    the persist every candle read re-runs scan -> validate -> aggregate:
+    five events scans (one each in candles and calculated, three in
+    anchors)."""
+    spark.catalog.clearCache()
+    r = run_batch_pipeline(ticks_from_events(spark, sf_small))
+    _run(r)
+    plans = [
+        df._jdf.queryExecution().executedPlan() for df in (r.candles, r.calculated, r.anchors)
+    ]
+    try:
+        assert file_scans(plans)["events.parquet"] == 1
+        reads = [
+            [n for n in _walk(p) if n.getClass().getSimpleName() == "InMemoryTableScanExec"]
+            for p in plans
+        ]
+        caches = [{cache_id(n) for n in ns} for ns in reads]
+        # candles reads one cache, which holds the events scan; the
+        # other outputs read it too
+        assert len(caches[0]) == 1 and all(caches[0] <= c for c in caches[1:])
+        assert file_scans([reads[0][0].relation().cachedPlan()])["events.parquet"] == 1
+    finally:
+        r.candles.unpersist()
+
+
+def test_candle_cache_freed_by_unpersist(spark, sf_small):
+    """The documented contract: ``result.candles.unpersist()`` frees
+    the one cache a run adds, so a loop of runs does not accumulate
+    cache entries."""
+    spark.catalog.clearCache()
+    start = _cached_entries(spark)
+    for _ in range(2):
+        r = run_batch_pipeline(ticks_from_events(spark, sf_small))
+        _run(r)
+        assert _cached_entries(spark) == start + 1
+        r.candles.unpersist()
+        assert _cached_entries(spark) == start
+
+
+def test_corpus_scope_owns_candle_cache(spark, sf_small):
+    """Run inside a corpus build scope, the candle cache belongs to
+    the scope and a full release frees it."""
+    cache_scope.release_scoped_caches()
+    spark.catalog.clearCache()
+    start = _cached_entries(spark)
+    cache_scope.begin_scope("pipeline_scope_probe")
+    try:
+        r = run_batch_pipeline(ticks_from_events(spark, sf_small))
+    finally:
+        cache_scope.end_scope()
+    _run(r)
+    assert _cached_entries(spark) == start + 1
+    cache_scope.release_scoped_caches()
+    assert _cached_entries(spark) == start and not r.candles.is_cached

@@ -85,3 +85,18 @@ def test_canary_audit_gates(tmp_path):
         + "\n".join(json.dumps({"t": now + 100 + i, "ms": 18.0}) for i in range(20))
     )
     assert canary.audit(str(log), now + 99, now + 130) == 0
+
+
+def test_scaling_merge_emits_null_ratio_for_zero_c32(tmp_path, monkeypatch):
+    """A c32 time that rounds to 0 ms has no 8c/32c ratio: the merge
+    writes null for it instead of dividing by zero."""
+    import scaling_sf1
+
+    monkeypatch.setattr(scaling_sf1, "_REPO", str(tmp_path))
+    monkeypatch.setattr(scaling_sf1, "OUT", str(tmp_path / "scaling.json"))
+    (tmp_path / ".scaling_c32.json").write_text(json.dumps({"a": 0.0, "b": 0.5}))
+    (tmp_path / ".scaling_c8.json").write_text(json.dumps({"a": 0.004, "b": 0.6}))
+    assert scaling_sf1.merge() == 0
+    rows = json.loads((tmp_path / "scaling.json").read_text())["queries"]
+    assert rows["a"]["c8_over_c32"] is None
+    assert rows["b"]["c8_over_c32"] == 1.2

@@ -66,3 +66,57 @@ def test_stream_upsert_exactly_once_via_file_uri(spark, tmp_path):
     assert apply_upsert_batch(b1, 1, table, ["k"], "ts") is True
     got = {(r.k, r.v) for r in spark.read.parquet(table).collect()}
     assert got == {(1, "a"), (2, "B")}
+
+
+def test_redrain_with_fresh_checkpoint_skips_marked_batches(spark, sf_small, tmp_path):
+    """Drain the same tick slices twice into one table, the second time
+    with a fresh checkpoint: the replayed batch ids are all marked, so
+    the sink skips them and the table stays as the first drain left it.
+    A skipped batch must still run, or the watermarked aggregation's
+    state stores stay uncommitted and the drain fails
+    (STATE_STORE_COMMIT_VALIDATION_FAILED)."""
+    import pyarrow.parquet as pq
+
+    from auto_trade_data_pipeline_spark.streaming.candles import (
+        read_ticks_stream,
+        streaming_candles,
+    )
+    from auto_trade_data_pipeline_spark.streaming.sink import (
+        committed_batches,
+        stream_upsert_writer,
+    )
+
+    events = pq.read_table(f"{sf_small}/events.parquet").sort_by("ts")
+    src = tmp_path / "in" / "events.parquet"
+    src.mkdir(parents=True)
+    n_slices = 5
+    step = -(-events.num_rows // n_slices)
+    for i in range(n_slices):
+        part = src / f"part-{i:05d}.parquet"
+        pq.write_table(events.slice(i * step, step), part)
+        # increasing mtimes: one slice per micro-batch, in event-time order
+        os.utime(part, (1_700_000_000 + i, 1_700_000_000 + i))
+    table = str(tmp_path / "table")
+
+    def drain(checkpoint: str) -> None:
+        ticks = read_ticks_stream(spark, str(tmp_path / "in"), max_files_per_trigger=1)
+        q = (
+            streaming_candles(ticks, watermark="1 minute")
+            .writeStream.foreachBatch(
+                stream_upsert_writer(table, ["symbol", "timestamp"], "timestamp")
+            )
+            .option("checkpointLocation", str(tmp_path / checkpoint))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    def snapshot() -> set[tuple]:
+        return {tuple(r) for r in spark.read.parquet(table).collect()}
+
+    drain("checkpoint_1")
+    first, marked = snapshot(), committed_batches(table)
+    assert first and marked
+    drain("checkpoint_2")
+    assert snapshot() == first
+    assert committed_batches(table) == marked

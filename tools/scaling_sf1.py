@@ -91,7 +91,8 @@ def merge() -> int:
         n: {
             "c32_sec": c32[n],
             "c8_sec": c8[n],
-            "c8_over_c32": round(c8[n] / c32[n], 2),
+            # c32 is rounded to ms: a 0 there has no ratio
+            "c8_over_c32": round(c8[n] / c32[n], 2) if c32[n] else None,
         }
         for n in c32
         if n in c8
