@@ -5,15 +5,15 @@ programs communicating through CSV files (SURVEY §3). Here the same
 DAG is a library function with no intermediate file round-trips. As
 in the reference, where stage 2 writes ``candles_1s`` once and stage 3
 reads it for every derived table, the 1-s candle table is materialized
-once per run (persisted) and every consumer reads that one relation,
-so the tick scan, validation and candle aggregation run once, not once
-per output. Stage boundaries can still be checkpointed to parquet
-(pass ``output_dir``) to keep the reference's restartable-stage
-property.
+once per run (a local checkpoint) and every consumer reads that one
+relation, so the tick scan, validation and candle aggregation run
+once, not once per output. Stage boundaries can still be checkpointed
+to parquet (pass ``output_dir``) to keep the reference's
+restartable-stage property.
 
     ticks (any source: rest.fetch_trades, files.read_ticks, events)
       └─ validate_split ──────────── invalid side-output (S9)
-      └─ valid ─ aggregate_candles ─ candles_1s (A1-A3), persisted once
+      └─ valid ─ aggregate_candles ─ candles_1s (A1-A3), materialized once
                    ├─ enrich: local cols + sessions + kernel +
                    │  bollinger + volume spike  →  candles_calculated
                    ├─ anchored_vwap_points ─ fill_anchored_vwap
@@ -32,7 +32,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from auto_trade_data_pipeline_spark import cache_scope, sinks
+from auto_trade_data_pipeline_spark import sinks
 from auto_trade_data_pipeline_spark.operators.anchors import (
     anchored_vwap_points,
     fill_anchored_vwap,
@@ -74,15 +74,19 @@ def run_batch_pipeline(
     ``blocked_windows=True`` routes the bounded ROWS windows through
     the block-parallel evaluator (operators/blocked.py).
 
-    ``result.candles`` is persisted: the first action that reads it
-    fills the cache, and ``calculated``, ``anchors`` (both of its
-    stages) and the checkpoint writes read that cache instead of
-    re-running scan, validation and aggregation. Free it with
-    ``result.candles.unpersist()`` once the outputs are consumed.
-    Inside a corpus build scope (``cache_scope``) the scope owns the
-    cache and releases it instead."""
+    ``result.candles`` is a lazy local checkpoint: the first action
+    that reads it computes the candles once and keeps their blocks, and
+    ``calculated``, ``anchors`` (both of its stages) and the checkpoint
+    writes read those blocks instead of re-running scan, validation and
+    aggregation. Its plan no longer refers to the tick source, so the
+    cache manager never matches it against a later run over the same
+    path (each run reads the files as they are then), and nothing has
+    to be freed: Spark's ContextCleaner drops the blocks once the result
+    is garbage-collected. Local checkpoint blocks cannot be recomputed,
+    so losing an executor that holds them fails later reads of this
+    result; run the pipeline again."""
     valid, invalid = validate_split(ticks, tick_valid_predicate())
-    candles = cache_scope.scoped_persist(aggregate_candles(valid, timeframe_seconds))
+    candles = aggregate_candles(valid, timeframe_seconds).localCheckpoint(eager=False)
     # Narrow native families first, the wide kernel last — no shuffle
     # ever moves the 119-column enriched rows.
     calculated = with_local_time(candles)

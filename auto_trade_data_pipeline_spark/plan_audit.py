@@ -34,7 +34,6 @@ from __future__ import annotations
 import re
 from collections import Counter
 
-from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 #: Node classes that bound the row count of everything above them.
@@ -55,7 +54,7 @@ _BOUNDING = frozenset(
 _WINDOW_NODES = frozenset({"WindowExec", "WindowInPandasExec", "WindowGroupLimitExec"})
 
 
-def _walk(jplan, subqueries: bool = True, seen: set[int] | None = None):
+def _walk(jplan, subqueries: bool = True, seen: list | None = None):
     """Depth-first over the physical plan, descending through the
     subtrees a plain children() walk misses (round-6 advice): nested
     AdaptiveSparkPlanExec (initialPlan), the cached plan behind an
@@ -71,9 +70,13 @@ def _walk(jplan, subqueries: bool = True, seen: set[int] | None = None):
     initialPlan and the cached InMemoryTableScan plan ARE the
     row-producing dataflow and stay in both walks.
 
-    With a ``seen`` set the walk descends into each cache once, however
+    With a ``seen`` list the walk descends into each cache once, however
     many InMemoryTableScans read it — across every walk sharing the
-    set: the plan as it executes, where the cache is built once."""
+    list: the plan as it executes, where the cache is built once. A
+    cache is known by its ``CachedRDDBuilder`` (every scan of one cache
+    entry shares it), compared with Java ``equals``: it is a case class,
+    so equal builders are one cache, and unlike an identity hash two
+    distinct caches never compare equal."""
     yield jplan
     name = jplan.getClass().getSimpleName()
     if name == "AdaptiveSparkPlanExec":
@@ -83,9 +86,11 @@ def _walk(jplan, subqueries: bool = True, seen: set[int] | None = None):
         cached = jplan.relation().cachedPlan()
         if seen is None:
             yield from _walk(cached, subqueries)
-        elif (key := cache_id(jplan)) not in seen:
-            seen.add(key)
-            yield from _walk(cached, subqueries, seen)
+        else:
+            builder = jplan.relation().cacheBuilder()
+            if not any(builder.equals(b) for b in seen):
+                seen.append(builder)
+                yield from _walk(cached, subqueries, seen)
     if subqueries:
         subs = jplan.subqueries()
         for i in range(subs.size()):
@@ -95,19 +100,13 @@ def _walk(jplan, subqueries: bool = True, seen: set[int] | None = None):
         yield from _walk(children.apply(i), subqueries, seen)
 
 
-def cache_id(scan) -> int:
-    """Identity of the cache an InMemoryTableScanExec reads: every scan
-    of one cache entry shares its ``CachedRDDBuilder``."""
-    return SparkContext._jvm.System.identityHashCode(scan.relation().cacheBuilder())
-
-
 def file_scans(jplans) -> Counter[str]:
     """FileSourceScanExec count per scanned path (the last element of
     each root path, e.g. ``lineitem.parquet``) over the physical plans
     ``jplans``, each cache counted once however many of them read it:
     how often each file is read when the plans run one after another
     and share their caches."""
-    seen: set[int] = set()
+    seen: list = []
     out: Counter[str] = Counter()
     for jplan in jplans:
         for node in _walk(jplan, seen=seen):

@@ -4,21 +4,18 @@ every derived output reads."""
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from auto_trade_data_pipeline_spark import cache_scope
 from auto_trade_data_pipeline_spark.pipeline import run_batch_pipeline
-from auto_trade_data_pipeline_spark.plan_audit import _walk, cache_id, file_scans
+from auto_trade_data_pipeline_spark.plan_audit import _walk, file_scans
 from auto_trade_data_pipeline_spark.sources import ticks_from_events
 
 
 def _run(result) -> None:
     for df in (result.invalid_ticks, result.candles, result.calculated, result.anchors):
         df.write.mode("overwrite").format("noop").save()
-
-
-def _cached_entries(spark) -> int:
-    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
 
 
 def test_batch_pipeline_end_to_end(spark, sf_small, tmp_path):
@@ -47,64 +44,56 @@ def test_batch_pipeline_end_to_end(spark, sf_small, tmp_path):
         spark.read.parquet(str(tmp_path / "out/anchored_vwap_points_1s")).count()
         == out.anchors.count()
     )
-    out.candles.unpersist()
 
 
 def test_candles_materialized_once_and_shared(spark, sf_small):
-    """Every candle consumer reads one cached candle relation: over the
-    executed plans of ``candles``, ``calculated`` and ``anchors`` (the
-    points kernel and the VWAP fill both read candles) the events table
-    is scanned once, inside the cache ``candles`` itself reads. Without
-    the persist every candle read re-runs scan -> validate -> aggregate:
-    five events scans (one each in candles and calculated, three in
-    anchors)."""
-    spark.catalog.clearCache()
+    """Every candle consumer reads one materialized candle relation:
+    the executed plans of ``candles``, ``calculated`` and ``anchors``
+    (the points kernel and the VWAP fill both read candles) scan no
+    events file and read one checkpointed candle RDD, computed by the
+    first of them to run. Without it every candle read re-runs scan ->
+    validate -> aggregate: five events scans (one each in candles and
+    calculated, three in anchors)."""
     r = run_batch_pipeline(ticks_from_events(spark, sf_small))
     _run(r)
     plans = [
         df._jdf.queryExecution().executedPlan() for df in (r.candles, r.calculated, r.anchors)
     ]
-    try:
-        assert file_scans(plans)["events.parquet"] == 1
-        reads = [
-            [n for n in _walk(p) if n.getClass().getSimpleName() == "InMemoryTableScanExec"]
-            for p in plans
-        ]
-        caches = [{cache_id(n) for n in ns} for ns in reads]
-        # candles reads one cache, which holds the events scan; the
-        # other outputs read it too
-        assert len(caches[0]) == 1 and all(caches[0] <= c for c in caches[1:])
-        assert file_scans([reads[0][0].relation().cachedPlan()])["events.parquet"] == 1
-    finally:
-        r.candles.unpersist()
+    assert file_scans(plans)["events.parquet"] == 0
+    rdds = [
+        [n.rdd() for n in _walk(p) if n.getClass().getSimpleName() == "RDDScanExec"]
+        for p in plans
+    ]
+    assert all(rdds) and len({rdd.id() for rs in rdds for rdd in rs}) == 1
+    assert rdds[0][0].isCheckpointed()
 
 
-def test_candle_cache_freed_by_unpersist(spark, sf_small):
-    """The documented contract: ``result.candles.unpersist()`` frees
-    the one cache a run adds, so a loop of runs does not accumulate
-    cache entries."""
-    spark.catalog.clearCache()
-    start = _cached_entries(spark)
+def test_pipeline_runs_add_no_cache_entries(spark, sf_small):
+    """The candle table is not a cache-manager entry: a loop of runs
+    leaves nothing for the caller to free."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    start = cache.numCachedEntries()
     for _ in range(2):
-        r = run_batch_pipeline(ticks_from_events(spark, sf_small))
-        _run(r)
-        assert _cached_entries(spark) == start + 1
-        r.candles.unpersist()
-        assert _cached_entries(spark) == start
+        _run(run_batch_pipeline(ticks_from_events(spark, sf_small)))
+        assert cache.numCachedEntries() == start
 
 
-def test_corpus_scope_owns_candle_cache(spark, sf_small):
-    """Run inside a corpus build scope, the candle cache belongs to
-    the scope and a full release frees it."""
-    cache_scope.release_scoped_caches()
-    spark.catalog.clearCache()
-    start = _cached_entries(spark)
-    cache_scope.begin_scope("pipeline_scope_probe")
-    try:
-        r = run_batch_pipeline(ticks_from_events(spark, sf_small))
-    finally:
-        cache_scope.end_scope()
+def test_rerun_reads_changed_input(spark, sf_small, tmp_path):
+    """A second run in the same session over the same path, after its
+    files changed, computes all four outputs from the new files: no
+    candle table of the first run is matched against the second."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    events = pq.read_table(f"{sf_small}/events.parquet")
+    pq.write_table(events, sf / "events.parquet")
+    _run(run_batch_pipeline(ticks_from_events(spark, str(sf))))
+
+    symbol = events.column("event_type")[0].as_py()
+    kept = events.filter(pc.equal(events.column("event_type"), symbol))
+    pq.write_table(kept, sf / "events.parquet")
+    r = run_batch_pipeline(ticks_from_events(spark, str(sf)))
     _run(r)
-    assert _cached_entries(spark) == start + 1
-    cache_scope.release_scoped_caches()
-    assert _cached_entries(spark) == start and not r.candles.is_cached
+    trades = r.candles.agg(F.sum("number_of_trades")).first()[0]
+    assert r.invalid_ticks.count() + trades == kept.num_rows
+    for df in (r.candles, r.calculated, r.anchors):
+        assert {row.symbol for row in df.select("symbol").distinct().collect()} == {symbol}
