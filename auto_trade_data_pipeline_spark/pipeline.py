@@ -82,9 +82,10 @@ def run_batch_pipeline(
     cache manager never matches it against a later run over the same
     path (each run reads the files as they are then), and nothing has
     to be freed: Spark's ContextCleaner drops the blocks once the result
-    is garbage-collected. Local checkpoint blocks cannot be recomputed,
-    so losing an executor that holds them fails later reads of this
-    result; run the pipeline again."""
+    is garbage-collected (until then they count against storage memory
+    and spill to disk under pressure). Local checkpoint blocks cannot
+    be recomputed, so losing an executor that holds them fails later
+    reads of this result; run the pipeline again."""
     valid, invalid = validate_split(ticks, tick_valid_predicate())
     candles = aggregate_candles(valid, timeframe_seconds).localCheckpoint(eager=False)
     # Narrow native families first, the wide kernel last — no shuffle
