@@ -22,6 +22,8 @@ import pandas as pd
 
 from pyspark.sql.functions import pandas_udf
 
+from auto_trade_data_pipeline_spark.operators.windows import SESSION_BOUNDS
+
 __all__ = ["typical_price_udf", "vwap_agg_udf"]
 
 
@@ -50,34 +52,17 @@ def vwap_agg_udf(price: pd.Series, volume: pd.Series) -> float:
 # UDTF surface (Spark 4): table-generating function
 # ---------------------------------------------------------------------------
 
-#: NY-day minute bounds, one row per W12 session —
-#: EXACTLY the partition _session_preds (operators/windows.py:54)
-#: encodes as per-row predicates; the parity test joins this calendar
-#: against the flags and asserts they agree minute-for-minute.
-SESSION_BOUNDS = [
-    ("is_overnight_early", 0, 120),
-    ("is_overnight_late", 120, 240),
-    ("is_early_morning", 240, 480),
-    ("is_premarket_early", 480, 540),
-    ("is_premarket_morn", 540, 570),
-    ("is_morning", 570, 660),
-    ("is_late_morning", 660, 750),
-    ("is_midday", 750, 840),
-    ("is_early_afternoon", 840, 930),
-    ("is_late_afternoon", 930, 990),
-    ("is_closing", 990, 1021),
-    ("is_afterhours", 1021, 1440),
-]
-
 try:  # pyspark >= 3.5
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="session_name string, start_minute int, end_minute int")
     class SessionCalendar:
         """UDTF emitting the 12-session NY trading-day calendar as a
-        TABLE — the lateral-joinable twin of the W12 flag expressions
-        (one row per session, [start_minute, end_minute) half-open,
-        partitioning the 1440-minute day). Register with
+        TABLE — the lateral-joinable form of the W12 flags: it yields
+        ``operators.windows.SESSION_BOUNDS``, the table the flag
+        expressions derive from (one row per session,
+        [start_minute, end_minute) half-open, partitioning the
+        1440-minute day). Register with
         ``spark.udtf.register("session_calendar", SessionCalendar)``
         and use ``SELECT * FROM session_calendar()`` or a LATERAL
         join. Dimension-sized output -> always broadcast."""

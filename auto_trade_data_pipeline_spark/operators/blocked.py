@@ -27,7 +27,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window, WindowSpec
+from pyspark.sql.window import Window
 
 __all__ = ["blocked_rows_window", "blocked_copies", "INTERNAL_COLS"]
 
@@ -100,20 +100,19 @@ def blocked_copies(
 def blocked_rows_window(
     df: DataFrame,
     lookback: int,
-    apply_fn: Callable[[DataFrame, WindowSpec], DataFrame],
+    apply_fn: Callable[[DataFrame, str], DataFrame],
     block_size: int = 4096,
     ts_col: str = "timestamp",
 ) -> DataFrame:
-    """Evaluate `apply_fn(df, w, base)` — which must only add columns
+    """Evaluate `apply_fn(df, order)` — which must only add columns
     via window functions whose frames reach at most `lookback` ROWS
     back (frame aggs, lag up to `lookback`) — with block-level
-    parallelism instead of symbol-level. `w` is the base spec with
-    the full `rowsBetween(-lookback, 0)` frame; `base` is the bare
-    partition+order spec so multi-frame callers can apply their own
-    (smaller) frames in the SAME pass — several window families share
-    one sequence/overlap computation. Requires a total per-symbol
-    order on `ts_col` (unique timestamps per symbol, e.g. candles)."""
+    parallelism instead of symbol-level. `order` is the window's SQL
+    ``PARTITION BY … ORDER BY …`` clause over the blocks; callers put
+    their own ROWS frames after it, so several window families share
+    one sequence/overlap computation in the SAME pass. Requires a
+    total per-symbol order on `ts_col` (unique timestamps per symbol,
+    e.g. candles)."""
     u = blocked_copies(df, lookback, block_size, ts_col)
-    base = Window.partitionBy("symbol", "__grp").orderBy("__seq")
-    out = apply_fn(u, base.rowsBetween(-lookback, 0), base)
+    out = apply_fn(u, "PARTITION BY symbol, __grp ORDER BY __seq")
     return out.filter(F.col("__emit")).drop(*_INTERNAL)

@@ -66,22 +66,20 @@ def word_histogram(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _pairs(toks):
-    """Adjacent token pairs of an array column, guarded for size < 2
-    (sequence(1, 0) counts DOWN — the word_shingles trap).
-
-    Column-form reference for the SQL-string twin inlined in
-    :func:`bpe_train` (round-10 driver-latency pass); tests pin the
-    two forms equal."""
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 1),
-        lambda j: F.struct(
-            F.element_at(toks, j).alias("a"), F.element_at(toks, j + 1).alias("b")
-        ),
-    )
-    return F.when(F.size(toks) >= 2, grams).otherwise(
-        F.array().cast("array<struct<a:string,b:string>>")
-    )
+#: The per-iteration pair stream of :func:`bpe_train`: adjacent token
+#: pairs of each segmentation as ``p = struct<a, b>``, exploded, with
+#: the size < 2 guard (sequence(1, 0) counts DOWN — the word_shingles
+#: trap). ONE selectExpr string, parsed in a single py4j call: the loop
+#: pays this build 8+ times per training run and the iteration tables
+#: are histogram-sized, so driver latency is a real part of each
+#: iteration (round-10 A/B: loop 1.40 -> 1.17 s at sf0.1).
+_TOKS_SQL = "split(trim(seq), ' ')"
+_PAIRS_SQL = f"""explode(
+      CASE WHEN size({_TOKS_SQL}) >= 2 THEN
+        transform(sequence(1, size({_TOKS_SQL}) - 1),
+                  j -> named_struct('a', element_at({_TOKS_SQL}, j),
+                                    'b', element_at({_TOKS_SQL}, j + 1)))
+      ELSE CAST(array() AS ARRAY<STRUCT<a: STRING, b: STRING>>) END) AS p"""
 
 
 def bpe_train(
@@ -125,22 +123,9 @@ def bpe_train(
         F.concat(F.lit(" "), F.array_join(chars, " "), F.lit(" ")).alias("seq"),
     ).localCheckpoint(eager=True)
     merges: list[tuple[int, str, str, int]] = []
-    # The per-iteration pair stream as ONE selectExpr string — the
-    # same explode/transform/guard expressions :func:`_pairs` builds
-    # from Column objects, but parsed in a single py4j call. The loop
-    # pays this build 8+ times per training run and the iteration
-    # tables are histogram-sized, so driver latency is a real part of
-    # each iteration (round-10 A/B: loop 1.40 -> 1.17 s at sf0.1).
-    toks_sql = "split(trim(seq), ' ')"
-    pairs_sql = f"""explode(
-      CASE WHEN size({toks_sql}) >= 2 THEN
-        transform(sequence(1, size({toks_sql}) - 1),
-                  j -> named_struct('a', element_at({toks_sql}, j),
-                                    'b', element_at({toks_sql}, j + 1)))
-      ELSE CAST(array() AS ARRAY<STRUCT<a: STRING, b: STRING>>) END) AS p"""
     for i in range(iters):
         counts = (
-            seqs.selectExpr(pairs_sql, "wcount")
+            seqs.selectExpr(_PAIRS_SQL, "wcount")
             .groupBy("p.a", "p.b")
             .agg(F.sum("wcount").alias("cnt"))
         )

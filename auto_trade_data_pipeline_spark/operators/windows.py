@@ -13,15 +13,19 @@ partition; at scale we parallelize across symbols (SURVEY §4). Frames
 are ROWS-based and bounded except the daily running extrema, which is
 unbounded-preceding within a (symbol, day) partition — bounded state
 either way.
+
+One implementation per family: the Bollinger and volume-spike builders
+take the window's ``PARTITION BY … ORDER BY …`` clause, so the
+block-parallel entry :func:`with_rolling_features_blocked` runs the
+same expressions as :func:`with_bollinger` / :func:`with_volume_spike`.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import add
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from auto_trade_data_pipeline_spark.operators.blocked import blocked_rows_window
 
 NY_TZ = "America/New_York"
 
@@ -55,60 +59,25 @@ def with_typical_price(df: DataFrame) -> DataFrame:
     )
 
 
-#: (flag, predicate builder) in reference order
-#: (``src/candle_to_calcs.py:366-377``). h = NY hour, m = NY minute.
-def _session_preds(h: Column, m: Column) -> list[tuple[str, Column]]:
-    return [
-        ("is_overnight_early", (h >= 0) & (h < 2)),
-        ("is_overnight_late", (h >= 2) & (h < 4)),
-        ("is_early_morning", (h >= 4) & (h < 8)),
-        ("is_premarket_early", (h >= 8) & (h < 9)),
-        ("is_premarket_morn", (h == 9) & (m < 30)),
-        ("is_morning", ((h == 9) & (m >= 30)) | (h == 10)),
-        ("is_late_morning", (h == 11) | ((h == 12) & (m < 30))),
-        ("is_midday", ((h == 12) & (m >= 30)) | (h == 13)),
-        ("is_early_afternoon", (h == 14) | ((h == 15) & (m < 30))),
-        ("is_late_afternoon", ((h == 15) & (m >= 30)) | ((h == 16) & (m < 30))),
-        ("is_closing", ((h == 16) & (m >= 30)) | ((h == 17) & (m < 1))),
-        ("is_afterhours", ((h == 17) & (m >= 1)) | (h >= 18)),
-    ]
-
-
-SESSION_FLAGS = [
-    "is_overnight_early",
-    "is_overnight_late",
-    "is_early_morning",
-    "is_premarket_early",
-    "is_premarket_morn",
-    "is_morning",
-    "is_late_morning",
-    "is_midday",
-    "is_early_afternoon",
-    "is_late_afternoon",
-    "is_closing",
-    "is_afterhours",
+#: The W12 sessions in reference order (``src/candle_to_calcs.py:366-377``)
+#: as half-open NY minute-of-day ranges [start, end) tiling the day; the
+#: flags below and the ``SessionCalendar`` UDTF both read this table.
+SESSION_BOUNDS = [
+    ("is_overnight_early", 0, 120),
+    ("is_overnight_late", 120, 240),
+    ("is_early_morning", 240, 480),
+    ("is_premarket_early", 480, 540),
+    ("is_premarket_morn", 540, 570),
+    ("is_morning", 570, 660),
+    ("is_late_morning", 660, 750),
+    ("is_midday", 750, 840),
+    ("is_early_afternoon", 840, 930),
+    ("is_late_afternoon", 930, 990),
+    ("is_closing", 990, 1021),
+    ("is_afterhours", 1021, 1440),
 ]
 
-
-#: SQL-text twins of ``_session_preds`` ({h} = NY hour, {m} = NY
-#: minute) — identical predicates, parsed in one selectExpr call
-#: instead of ~80 py4j expression-construction round trips (round-10
-#: build-latency pass; ``_session_preds`` remains the Column-form
-#: reference and tests pin the two forms equal).
-_SESSION_PRED_SQL = [
-    ("is_overnight_early", "{h} >= 0 AND {h} < 2"),
-    ("is_overnight_late", "{h} >= 2 AND {h} < 4"),
-    ("is_early_morning", "{h} >= 4 AND {h} < 8"),
-    ("is_premarket_early", "{h} >= 8 AND {h} < 9"),
-    ("is_premarket_morn", "{h} = 9 AND {m} < 30"),
-    ("is_morning", "({h} = 9 AND {m} >= 30) OR {h} = 10"),
-    ("is_late_morning", "{h} = 11 OR ({h} = 12 AND {m} < 30)"),
-    ("is_midday", "({h} = 12 AND {m} >= 30) OR {h} = 13"),
-    ("is_early_afternoon", "{h} = 14 OR ({h} = 15 AND {m} < 30)"),
-    ("is_late_afternoon", "({h} = 15 AND {m} >= 30) OR ({h} = 16 AND {m} < 30)"),
-    ("is_closing", "({h} = 16 AND {m} >= 30) OR ({h} = 17 AND {m} < 1)"),
-    ("is_afterhours", "({h} = 17 AND {m} >= 1) OR {h} >= 18"),
-]
+SESSION_FLAGS = [name for name, _, _ in SESSION_BOUNDS]
 
 
 def with_session_flags(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
@@ -116,12 +85,12 @@ def with_session_flags(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
     (``src/candle_to_calcs.py:352-379``). The buckets partition the
     24h day — exactly one flag is 1 per row (FIXTURES.md §C.5)."""
     local = f"from_utc_timestamp({ts_col}, '{NY_TZ}')"
-    h, m = f"hour({local})", f"minute({local})"
+    mod = f"hour({local}) * 60 + minute({local})"
     return df.selectExpr(
         "*",
         *[
-            f"CAST(({pred.format(h=h, m=m)}) AS INT) AS {name}"
-            for name, pred in _SESSION_PRED_SQL
+            f"CAST(({mod} >= {lo} AND {mod} < {hi}) AS INT) AS {name}"
+            for name, lo, hi in SESSION_BOUNDS
         ],
     )
 
@@ -156,72 +125,17 @@ def with_running_daily_extrema(df: DataFrame) -> DataFrame:
     )
 
 
-def _bollinger_cols(df: DataFrame, w, period: int, nbdev: float) -> DataFrame:
-    # Evaluate each window aggregate ONCE: referencing the raw window
-    # expressions from bb_upper/bb_lower as well as bb_mid makes the
-    # Window operator carry count/avg three times and stddev twice
-    # (Catalyst does not dedup window expressions) — named columns cut
-    # the per-row window work from 10 running aggregates to 3.
-    cnt, avg, sd = F.count("close").over(w), F.avg("close").over(w), F.stddev_pop("close").over(w)
-    df = df.withColumns({"__bb_cnt": cnt, "__bb_avg": avg, "__bb_sd": sd})
-    warm = F.col("__bb_cnt") >= period
-    mid = F.when(warm, F.col("__bb_avg")).otherwise(F.col("close"))
-    dev = F.when(warm, F.col("__bb_sd")).otherwise(F.lit(0.0))
-    df = (
-        df.withColumn("bb_mid", mid)
-        .withColumn("bb_upper", mid + nbdev * dev)
-        .withColumn("bb_lower", mid - nbdev * dev)
-        .drop("__bb_cnt", "__bb_avg", "__bb_sd")
-    )
-    width = F.col("bb_upper") - F.col("bb_lower")
-    return (
-        df.withColumn("bb_width", width)
-        .withColumn(
-            "bb_pos",
-            F.when(width != 0, (F.col("close") - F.col("bb_lower")) / width).otherwise(0.0),
-        )
-        .withColumn(
-            "bb_breakout",
-            ((F.col("close") > F.col("bb_upper")) | (F.col("close") < F.col("bb_lower"))).cast(
-                "int"
-            ),
-        )
-    )
+_SYMBOL_ORDER = "PARTITION BY symbol ORDER BY timestamp"
 
 
-def with_bollinger(
-    df: DataFrame, period: int = 20, nbdev: float = 2.0, blocked: bool = False
-) -> DataFrame:
-    """W6: Bollinger(20,2) + width/pos/breakout
-    (``src/candle_to_calcs.py:419-425``).
-
-    Spec (pinned, talib-compatible): mid = SMA(period) over the
-    trailing ROWS frame, bands = mid ± nbdev·stddev_pop (population
-    σ, like talib BBANDS), warm-up rows (<period) fall back to
-    ``close`` (the reference's ``fillna(df["close"])``).  The
-    reference's div-by-zero guard on bb_pos is a no-op bug
-    (``.replace(0,nan).fillna(0)`` round-trips); we implement the
-    intent: bb_pos = 0 when the band width is 0.
-
-    ``blocked=True`` evaluates the bounded frame with block-level
-    parallelism (operators/blocked.py) — identical results, no
-    one-task-per-symbol serialization at scale.
-    """
-    if blocked:
-        from auto_trade_data_pipeline_spark.operators.blocked import blocked_rows_window
-
-        return blocked_rows_window(
-            df, period - 1, lambda u, w, _base: _bollinger_cols(u, w, period, nbdev)
-        )
-    # String fast lane for the standard symbol window (round-10
-    # build-latency pass): the same expressions as _bollinger_cols in
-    # 4 py4j calls instead of ~60. The blocked path above keeps the
-    # Column form (its window spec is caller-supplied); tests pin the
-    # two lanes value-equal.
-    over = (
-        f"OVER (PARTITION BY symbol ORDER BY timestamp "
-        f"ROWS BETWEEN {period - 1} PRECEDING AND CURRENT ROW)"
-    )
+def _bollinger(df: DataFrame, order: str, period: int, nbdev: float) -> DataFrame:
+    """Bollinger columns over the trailing ``period`` rows of the window
+    ``order`` (``PARTITION BY … ORDER BY …``). SQL text: 4 py4j calls
+    instead of ~60 Column constructions. Each window aggregate is
+    evaluated ONCE into a named column: Catalyst does not dedup window
+    expressions, so referencing them from bb_upper/bb_lower as well as
+    bb_mid would run 10 running aggregates per row instead of 3."""
+    over = f"OVER ({order} ROWS BETWEEN {period - 1} PRECEDING AND CURRENT ROW)"
     nb = f"CAST({nbdev!r} AS DOUBLE)"
     mid = f"CASE WHEN __bb_cnt >= {period} THEN __bb_avg ELSE close END"
     dev = f"CASE WHEN __bb_cnt >= {period} THEN __bb_sd ELSE CAST(0.0 AS DOUBLE) END"
@@ -249,31 +163,25 @@ def with_bollinger(
     )
 
 
-def _volume_spike_cols(df: DataFrame, w, spike_multiplier: float) -> DataFrame:
-    return df.withColumn("rolling_avg_volume", F.avg("volume").over(w)).withColumn(
-        "is_volume_spike",
-        (F.col("volume") > F.col("rolling_avg_volume") * spike_multiplier).cast("int"),
-    )
+def with_bollinger(df: DataFrame, period: int = 20, nbdev: float = 2.0) -> DataFrame:
+    """W6: Bollinger(20,2) + width/pos/breakout
+    (``src/candle_to_calcs.py:419-425``).
+
+    Spec (pinned, talib-compatible): mid = SMA(period) over the
+    trailing ROWS frame, bands = mid ± nbdev·stddev_pop (population
+    σ, like talib BBANDS), warm-up rows (<period) fall back to
+    ``close`` (the reference's ``fillna(df["close"])``).  The
+    reference's div-by-zero guard on bb_pos is a no-op bug
+    (``.replace(0,nan).fillna(0)`` round-trips); we implement the
+    intent: bb_pos = 0 when the band width is 0.
+    """
+    return _bollinger(df, _SYMBOL_ORDER, period, nbdev)
 
 
-def with_volume_spike(
-    df: DataFrame, window: int = 60, spike_multiplier: float = 1.5, blocked: bool = False
-) -> DataFrame:
-    """W10 (``src/candle_to_calcs.py:517-526``): trailing mean volume
-    (min_periods=1) and spike flag. ``blocked=True`` as in
-    :func:`with_bollinger`."""
-    if blocked:
-        from auto_trade_data_pipeline_spark.operators.blocked import blocked_rows_window
-
-        return blocked_rows_window(
-            df, window - 1, lambda u, w, _base: _volume_spike_cols(u, w, spike_multiplier)
-        )
-    # String fast lane, as in with_bollinger (blocked path keeps the
-    # Column form; tests pin the lanes value-equal).
-    over = (
-        f"OVER (PARTITION BY symbol ORDER BY timestamp "
-        f"ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW)"
-    )
+def _volume_spike(df: DataFrame, order: str, window: int, spike_multiplier: float) -> DataFrame:
+    """Volume-spike columns over the trailing ``window``-row frame of
+    the window ``order``, as :func:`_bollinger`."""
+    over = f"OVER ({order} ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW)"
     return df.selectExpr(
         "*", f"avg(volume) {over} AS rolling_avg_volume"
     ).selectExpr(
@@ -283,6 +191,14 @@ def with_volume_spike(
     )
 
 
+def with_volume_spike(
+    df: DataFrame, window: int = 60, spike_multiplier: float = 1.5
+) -> DataFrame:
+    """W10 (``src/candle_to_calcs.py:517-526``): trailing mean volume
+    (min_periods=1) and spike flag."""
+    return _volume_spike(df, _SYMBOL_ORDER, window, spike_multiplier)
+
+
 def with_rolling_features_blocked(
     df: DataFrame,
     bb_period: int = 20,
@@ -290,20 +206,18 @@ def with_rolling_features_blocked(
     vol_window: int = 60,
     spike_multiplier: float = 1.5,
 ) -> DataFrame:
-    """Bollinger + volume spike in ONE blocked pass: both frame
-    families share a single sequence/overlap computation and a single
-    window exchange (lookback = the larger frame). Chaining two
-    blocked calls would rebuild the block machinery — and rescan the
-    upstream plan — twice."""
-    from auto_trade_data_pipeline_spark.operators.blocked import blocked_rows_window
+    """Bollinger + volume spike in ONE block-parallel pass
+    (operators/blocked.py): the builders of :func:`with_bollinger` and
+    :func:`with_volume_spike` over the per-(symbol, block) window share
+    one sequence/overlap computation and one window exchange (lookback
+    = the larger frame); chaining two blocked calls would rescan the
+    upstream plan twice."""
 
-    lookback = max(bb_period, vol_window) - 1
+    def _both(u: DataFrame, order: str) -> DataFrame:
+        u = _bollinger(u, order, bb_period, nbdev)
+        return _volume_spike(u, order, vol_window, spike_multiplier)
 
-    def _both(u, _w, base):
-        u = _bollinger_cols(u, base.rowsBetween(-(bb_period - 1), 0), bb_period, nbdev)
-        return _volume_spike_cols(u, base.rowsBetween(-(vol_window - 1), 0), spike_multiplier)
-
-    return blocked_rows_window(df, lookback, _both)
+    return blocked_rows_window(df, max(bb_period, vol_window) - 1, _both)
 
 
 def with_trend_labels(
@@ -347,12 +261,3 @@ def gap_report(df: DataFrame, gap_seconds: float = 1.5, top_n: int = 5) -> DataF
         F.max("gap_s").alias("max_gap_seconds"),
         F.array_join(F.array_sort(F.collect_list(top)), ",").alias("gap_starts"),
     )
-
-
-def with_pattern_sum(df: DataFrame, pattern_cols: list[str]) -> DataFrame:
-    """A8 (``src/candle_to_calcs.py:509-515``): horizontal sum of the
-    CDL* pattern columns, null-safe."""
-    if not pattern_cols:
-        return df.withColumn("candle_pattern_sum", F.lit(0.0))
-    total = reduce(add, [F.coalesce(F.col(c), F.lit(0)).cast("double") for c in pattern_cols])
-    return df.withColumn("candle_pattern_sum", total)

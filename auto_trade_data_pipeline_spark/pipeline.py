@@ -66,13 +66,13 @@ def run_batch_pipeline(
     timeframe_seconds: int = 1,
     flush_secs: int = 300,
     output_dir: str | None = None,
-    blocked_windows: bool = False,
 ) -> PipelineResult:
     """Run the full reference DAG over a tick DataFrame and return all
     four logical tables (SURVEY §1.1). With ``output_dir`` set, each
     table is also checkpointed to parquet (restartable stages).
-    ``blocked_windows=True`` routes the bounded ROWS windows through
-    the block-parallel evaluator (operators/blocked.py).
+    The bounded ROWS windows run symbol-global; the block-parallel
+    form of the same Bollinger and volume-spike builders is
+    ``operators.windows.with_rolling_features_blocked``.
 
     ``result.candles`` is a lazy local checkpoint: the first action
     that reads it computes the candles once and keeps their blocks, and
@@ -92,8 +92,8 @@ def run_batch_pipeline(
     # ever moves the 119-column enriched rows.
     calculated = with_local_time(candles)
     calculated = with_session_flags(calculated)
-    calculated = with_bollinger(calculated, blocked=blocked_windows)
-    calculated = with_volume_spike(calculated, blocked=blocked_windows)
+    calculated = with_bollinger(calculated)
+    calculated = with_volume_spike(calculated)
     calculated = enrich_indicators(calculated)
     anchors = fill_anchored_vwap(
         anchored_vwap_points(candles, f"{timeframe_seconds}s", flush_secs), candles

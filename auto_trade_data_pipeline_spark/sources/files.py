@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from auto_trade_data_pipeline_spark import schemas
+from auto_trade_data_pipeline_spark.plan_audit import _walk
 
 #: The reference's on-disk timestamp format (``fetch_historical_trades_nvda.py:48``):
 #: "2024-01-02 14:30:00.123456 UTC".  For Spark's parser the literal
@@ -79,6 +80,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 N_TICK_SYMBOLS = 5
 
 
+#: Node classes that plan a shuffle: optimized logical operators
+#: (Deduplicate, Intersect and Except are rewritten into these by
+#: then), plus the exchanges of a cached relation's physical plan.
+_SHUFFLING = frozenset(
+    "Repartition RepartitionByExpression RebalancePartitions Sort Aggregate Join"
+    " Window WindowGroupLimit Distinct FlatMapGroupsInPandas FlatMapCoGroupsInPandas"
+    " ShuffleExchangeExec BroadcastExchangeExec".split()
+)
+
+
+def _shuffles(jplan) -> bool:
+    """Whether ``jplan`` (logical, or a cache's physical plan) has a
+    shuffle-introducing node — by node class, not plan text, where a
+    column like ``JoinKey`` or a path would match."""
+    for node in _walk(jplan):
+        name = node.getClass().getSimpleName()
+        if name in _SHUFFLING:
+            return True
+        if name == "InMemoryRelation" and _shuffles(node.cachedPlan()):
+            return True
+    return False
+
+
 def fan_out_scan(df: DataFrame) -> DataFrame:
     """Spread a scan whose file layout yields fewer input splits than
     the session's parallelism (guide §2.5 "input skew": the driver
@@ -109,9 +133,7 @@ def fan_out_scan(df: DataFrame) -> DataFrame:
     whole-subquery materialization. Asserted below rather than
     documented-only (r9 advice): the helper is exported API."""
     spark = df.sparkSession
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    shuffly = ("Repartition", "Sort ", "Aggregate", "Join", "Window", "Distinct")
-    if any(tok in plan for tok in shuffly):
+    if _shuffles(df._jdf.queryExecution().optimizedPlan()):
         raise ValueError(
             "fan_out_scan expects a raw scan (no shuffle in lineage); "
             "got a plan containing a shuffle-introducing operator — "

@@ -7,10 +7,18 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
+from auto_trade_data_pipeline_spark.operators.blocked import (
+    blocked_copies,
+    blocked_rows_window,
+)
 from auto_trade_data_pipeline_spark.operators.windows import (
+    _bollinger,
+    _volume_spike,
     with_bollinger,
+    with_rolling_features_blocked,
     with_volume_spike,
 )
+from auto_trade_data_pipeline_spark.plan_audit import _walk
 
 
 def _candles(spark, n=300, symbols=("A", "B")):
@@ -38,6 +46,10 @@ def _candles(spark, n=300, symbols=("A", "B")):
     )
 
 
+def _names(exprs):
+    return sorted(exprs.apply(i).sql() for i in range(exprs.size()))
+
+
 def _collect(df, cols):
     return sorted(tuple(r[c] for c in ("symbol", "timestamp", *cols)) for r in df.collect())
 
@@ -47,51 +59,50 @@ def test_blocked_bollinger_bit_identical(spark):
     cols = ["bb_mid", "bb_upper", "bb_lower", "bb_width", "bb_pos", "bb_breakout"]
     plain = _collect(with_bollinger(df), cols)
     # Tiny blocks force many carries, including across day boundaries.
-    blocked = _collect(with_bollinger(df, blocked=True), cols)
+    blocked = _collect(
+        blocked_rows_window(df, 19, lambda u, o: _bollinger(u, o, 20, 2.0), block_size=64),
+        cols,
+    )
     assert plain == blocked
 
 
 def test_blocked_volume_spike_bit_identical_small_blocks(spark):
-    from auto_trade_data_pipeline_spark.operators.blocked import blocked_rows_window
-    from auto_trade_data_pipeline_spark.operators.windows import _volume_spike_cols
-
     df = _candles(spark)
     cols = ["rolling_avg_volume", "is_volume_spike"]
     plain = _collect(with_volume_spike(df), cols)
     tiny = _collect(
-        blocked_rows_window(
-            df, 59, lambda u, w, _b: _volume_spike_cols(u, w, 1.5), block_size=64
-        ),
+        blocked_rows_window(df, 59, lambda u, o: _volume_spike(u, o, 60, 1.5), block_size=64),
         cols,
     )
     assert plain == tiny
 
 
 def test_blocked_plan_partitions_by_block_not_symbol(spark):
-    from auto_trade_data_pipeline_spark.operators.blocked import blocked_rows_window
-    from auto_trade_data_pipeline_spark.operators.windows import _bollinger_cols
-
     df = _candles(spark)
     out = blocked_rows_window(
-        df, 19, lambda u, w, _b: _bollinger_cols(u, w, 20, 2.0), block_size=64
+        df, 19, lambda u, o: _bollinger(u, o, 20, 2.0), block_size=64
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # The window exchange is keyed on (symbol, __grp) — parallelism
+    # The window's exchange is keyed on (symbol, __grp) — parallelism
     # scales with blocks (data volume), not symbol cardinality.
-    assert "__grp" in plan
+    exchange_keys = []
+    for node in _walk(out._jdf.queryExecution().executedPlan()):
+        if node.getClass().getSimpleName() == "WindowExec" and _names(
+            node.partitionSpec()
+        ) == ["__grp", "symbol"]:
+            exchange = next(
+                n for n in _walk(node) if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+            )
+            exchange_keys.append(_names(exchange.outputPartitioning().expressions()))
+    assert exchange_keys and all(k == ["__grp", "symbol"] for k in exchange_keys), exchange_keys
     assert out.count() == df.count()  # emit rows preserved exactly
-    # 300 rows/symbol at block 64 -> 5 blocks per symbol.
-    n_groups = (
-        df.count() // 64 // 2 + 1
+    # 300 rows/symbol at block 64 (lookback 19) -> 5 blocks per symbol.
+    blocks = blocked_copies(df, 19, 64).groupBy("symbol").agg(
+        F.countDistinct("__grp").alias("n")
     )
-    assert n_groups >= 5
+    assert {r["symbol"]: r["n"] for r in blocks.collect()} == {"A": 5, "B": 5}
 
 
 def test_combined_blocked_pass_bit_identical(spark):
-    from auto_trade_data_pipeline_spark.operators.windows import (
-        with_rolling_features_blocked,
-    )
-
     df = _candles(spark)
     cols = ["bb_mid", "bb_upper", "bb_pos", "bb_breakout", "rolling_avg_volume", "is_volume_spike"]
     plain = _collect(with_volume_spike(with_bollinger(df)), cols)

@@ -113,29 +113,24 @@ def test_bpe_degenerate_corpus_yields_empty_merges(spark):
     assert {r.word: r.seq.strip() for r in seg.collect()} == {"a": "a", "b": "b"}
 
 
-def test_pairs_sql_twin_matches_column_form(spark):
-    """The selectExpr pair stream inlined in bpe_train must equal the
-    _pairs Column form on adversarial segmentations (empty, 1-token,
-    multi-token, shared-boundary runs)."""
-    from pyspark.sql import functions as F
-
-    from auto_trade_data_pipeline_spark.operators.bpe import _pairs
+def test_pairs_sql_on_adversarial_segmentations(spark):
+    """The pair stream bpe_train runs (``_PAIRS_SQL``) on adversarial
+    segmentations — empty, 1-token, repeated tokens, multi-char
+    tokens — against literal expected (a, b, wcount) pairs."""
+    from auto_trade_data_pipeline_spark.operators.bpe import _PAIRS_SQL
 
     df = spark.createDataFrame(
         [(" a b c ", 3), (" a ", 1), ("  ", 1), (" x x x x ", 2), (" ab cd ", 5)],
         "seq string, wcount long",
     )
-    toks = F.split(F.trim(F.col("seq")), " ")
-    ref = df.select(F.explode(_pairs(toks)).alias("p"), "wcount")
-    toks_sql = "split(trim(seq), ' ')"
-    got = df.selectExpr(
-        f"""explode(
-      CASE WHEN size({toks_sql}) >= 2 THEN
-        transform(sequence(1, size({toks_sql}) - 1),
-                  j -> named_struct('a', element_at({toks_sql}, j),
-                                    'b', element_at({toks_sql}, j + 1)))
-      ELSE CAST(array() AS ARRAY<STRUCT<a: STRING, b: STRING>>) END) AS p""",
-        "wcount",
-    )
-    assert got.schema == ref.schema
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
+    got = df.selectExpr(_PAIRS_SQL, "wcount")
+    assert got.schema.simpleString() == "struct<p:struct<a:string,b:string>,wcount:bigint>"
+    pairs = sorted((r.p.a, r.p.b, r.wcount) for r in got.collect())
+    assert pairs == [
+        ("a", "b", 3),
+        ("ab", "cd", 5),
+        ("b", "c", 3),
+        ("x", "x", 2),
+        ("x", "x", 2),
+        ("x", "x", 2),
+    ]

@@ -479,6 +479,27 @@ def test_session_calendar_udtf_partitions_day_and_matches_flags(spark):
     spans = sorted((r["start_minute"], r["end_minute"]) for r in cal)
     assert spans[0][0] == 0 and spans[-1][1] == 1440
     assert all(a[1] == b[0] for a, b in zip(spans, spans[1:]))  # no gap/overlap
+    # Flags and calendar read one table, so their agreement below is
+    # circular on its own: pin the session starts to the reference's
+    # NY wall-clock boundaries (src/candle_to_calcs.py:366-377).
+    starts = {
+        r["session_name"]: f"{r['start_minute'] // 60:02d}:{r['start_minute'] % 60:02d}"
+        for r in cal
+    }
+    assert starts == {
+        "is_overnight_early": "00:00",
+        "is_overnight_late": "02:00",
+        "is_early_morning": "04:00",
+        "is_premarket_early": "08:00",
+        "is_premarket_morn": "09:00",
+        "is_morning": "09:30",
+        "is_late_morning": "11:00",
+        "is_midday": "12:30",
+        "is_early_afternoon": "14:00",
+        "is_late_afternoon": "15:30",
+        "is_closing": "16:30",
+        "is_afterhours": "17:01",
+    }
 
     # One tick per minute of a NY winter day (UTC-5): flags vs calendar.
     base = dt.datetime(2024, 1, 16, 5, 0, 0)  # 00:00 NY in UTC

@@ -511,3 +511,29 @@ def test_schema_evolution_merge_read(spark, tmp_path):
             spark, d,
             expected_schema="id long, sym string, price int, quality double",
         )
+
+
+def test_fan_out_scan_reads_node_classes_not_plan_text(spark, tmp_path):
+    """A raw parquet scan whose column and path names contain operator
+    words passes the raw-scan guard; an aggregate, a join, a sort or a
+    cached aggregate over that scan is still refused."""
+    from auto_trade_data_pipeline_spark.sources import fan_out_scan
+
+    path = str(tmp_path / "Join_Sort_Window")
+    spark.createDataFrame(
+        [(1, 2.0), (2, 3.0)], "JoinKey int, Aggregate double"
+    ).write.parquet(path)
+    raw = spark.read.parquet(path)
+    assert sorted(tuple(r) for r in fan_out_scan(raw).collect()) == [(1, 2.0), (2, 3.0)]
+    cached = raw.groupBy("JoinKey").count().cache()
+    try:
+        for shuffled in (
+            raw.groupBy("JoinKey").count(),
+            raw.join(raw.select("JoinKey"), "JoinKey"),
+            raw.orderBy("Aggregate"),
+            cached.select("JoinKey"),
+        ):
+            with pytest.raises(ValueError, match="expects a raw scan"):
+                fan_out_scan(shuffled)
+    finally:
+        cached.unpersist()
