@@ -11,6 +11,12 @@ Reference behavior being replicated:
   not two passes over the input: the scan is read once, the partition
   column routes rows to valid=/invalid= directories.
 
+Every snapshot rewrite (upsert, CDC apply, compaction) publishes through
+one helper, :func:`_publish`: write a staging copy next to the table,
+then swap it in through the Hadoop FileSystem API, for plain local
+paths and URIs (``file://``, ``hdfs://``, ``s3a://``) alike. On S3A a
+rename is copy+delete, so the swap is not atomic there.
+
 Scale notes: append and split are embarrassingly parallel. The
 snapshot upsert rewrites the whole table — correct at any scale but
 O(table); on a real deployment the same `upsert` transform feeds a
@@ -19,14 +25,13 @@ Delta MERGE instead of a directory swap, touching only matched files.
 
 from __future__ import annotations
 
-import os
-import shutil
+import functools
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from auto_trade_data_pipeline_spark.operators.dedup import dedup_keep_last
+from auto_trade_data_pipeline_spark.operators.dedup import cdc_apply, dedup_keep_last
 
 __all__ = [
     "write_append",
@@ -72,54 +77,17 @@ def write_upsert_snapshot(
     fmt: str = "parquet",
 ) -> None:
     """S7: merge `new` into the table at `path` with keyed keep-last
-    semantics, atomically-ish via a staging-dir swap (write the merged
-    snapshot next to the live dir, then replace). The reference's
-    pandas merge rewrites its CSV the same way, minus the staging
-    discipline (``src/fetch_historical_trades_nvda.py:237-258``).
-
-    Plain local paths swap with POSIX ``os.rename``; URI paths
-    (``file://``, ``hdfs://``, ...) swap through the Hadoop
-    FileSystem API so the staging discipline works on the table's own
-    store (round-5; pairs with streaming/sink._MarkerStore)."""
+    semantics, published by :func:`_publish` (write the merged snapshot
+    next to the live dir, then swap). The reference's pandas merge
+    rewrites its CSV the same way, minus the staging discipline
+    (``src/fetch_historical_trades_nvda.py:237-258``)."""
     spark = new.sparkSession
     if _path_exists(spark, path):
         existing = spark.read.format(fmt).load(path)
         merged = dedup_keep_last(existing.unionByName(new), keys, [order_col])
     else:
         merged = dedup_keep_last(new, keys, [order_col])
-    staging = f"{path}.__staging_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").format(fmt).save(staging)
-    backup = f"{path}.__old_{uuid.uuid4().hex[:8]}"
-    if "://" in path:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        jp = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jp.getFileSystem(conf)
-        jstaging = jvm.org.apache.hadoop.fs.Path(staging)
-        jbackup = jvm.org.apache.hadoop.fs.Path(backup)
-        # Hadoop FileSystem.rename reports failure by returning false
-        # (it does not raise like os.rename) — check every swap step,
-        # and never delete the backup (the only complete copy of the
-        # previous table) until the new snapshot is confirmed live
-        # (round-5 advice; _MarkerStore.commit follows the same rule).
-        had_live = fs.exists(jp)
-        if had_live and not fs.rename(jp, jbackup):
-            raise IOError(f"upsert swap: failed to move live {path} aside")
-        if not fs.rename(jstaging, jp):
-            if had_live and not fs.rename(jbackup, jp):
-                raise IOError(
-                    f"upsert swap: staging->live rename failed AND the backup "
-                    f"could not be restored — table left at {backup}"
-                )
-            raise IOError(f"upsert swap: failed to publish staging for {path}")
-        if fs.exists(jbackup):
-            fs.delete(jbackup, True)
-        return
-    if os.path.exists(path):
-        os.rename(path, backup)
-    os.rename(staging, path)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
+    _publish(merged, path, fmt)
 
 
 def write_split(
@@ -134,11 +102,58 @@ def write_split(
     return f"{root}/is_valid=true", f"{root}/is_valid=false"
 
 
+@functools.cache
+def _hadoop_path(jvm):
+    """The Hadoop ``Path`` class. Resolving it through the Py4J view
+    costs a gateway round trip per package level (~3 ms), so it is
+    resolved once per JVM."""
+    return jvm.org.apache.hadoop.fs.Path
+
+
+def _fs(spark: SparkSession, path: str):
+    """The Hadoop ``FileSystem`` serving ``path`` (plain or URI) and
+    ``path`` as a Hadoop ``Path``."""
+    p = _hadoop_path(spark._jvm)(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def _path_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
+    fs, p = _fs(spark, path)
+    return fs.exists(p)
+
+
+def _publish(
+    out: DataFrame, path: str, fmt: str, partition_by: list[str] | None = None
+) -> None:
+    """Replace the table at ``path`` with ``out``: write a staging copy
+    next to it, move the live table aside, publish the staging copy,
+    and delete the old table only once the new one is live.
+
+    Hadoop ``FileSystem.rename`` reports failure by returning false
+    (it does not raise), so every step is checked; if the publish
+    fails, the old table is moved back."""
+    spark = out.sparkSession
+    tag = uuid.uuid4().hex[:8]
+    staging, backup = f"{path}.__staging_{tag}", f"{path}.__old_{tag}"
+    writer = out.write.mode("overwrite").format(fmt)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.save(staging)
+    fs, live = _fs(spark, path)
+    Path = _hadoop_path(spark._jvm)
+    jstaging, jbackup = Path(staging), Path(backup)
+    had_live = fs.exists(live)
+    if had_live and not fs.rename(live, jbackup):
+        raise IOError(f"snapshot swap: failed to move live {path} aside")
+    if not fs.rename(jstaging, live):
+        if had_live and not fs.rename(jbackup, live):
+            raise IOError(
+                f"snapshot swap: publishing {staging} failed AND the old "
+                f"table could not be restored — it is left at {backup}"
+            )
+        raise IOError(f"snapshot swap: failed to publish {staging} to {path}")
+    if had_live:
+        fs.delete(jbackup, True)
 
 
 def compact_table(
@@ -160,8 +175,8 @@ def compact_table(
     bytes (not row counts — compression varies), lay rows out with
     repartitionByRange over `order_cols` so each output file covers a
     contiguous key range (min/max footer stats then prune file-level
-    on those columns — poor-man's clustering), and swap via the same
-    staging-dir protocol as the snapshot upsert. Without `order_cols`
+    on those columns — poor-man's clustering), and publish through the
+    same :func:`_publish` swap as the snapshot upsert. Without `order_cols`
     a plain repartition balances bytes. (Delta/Iceberg OPTIMIZE is the
     managed-table analogue; this is the filesystem-layout equivalent.)
 
@@ -171,10 +186,7 @@ def compact_table(
     gets its own files). Compacting a partitioned table without it
     would silently flatten the layout and break partition pruning —
     detected and refused."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+    fs, p = _fs(spark, path)
     if not partition_by:
         for st in fs.listStatus(p):
             if st.isDirectory() and "=" in st.getPath().getName():
@@ -192,15 +204,7 @@ def compact_table(
         if shuffle_cols
         else df.repartition(n_files)
     )
-    staging = f"{path}.__compact_{uuid.uuid4().hex[:8]}"
-    writer = out.write.mode("overwrite").format(fmt)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(staging)
-    backup = f"{path}.__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
+    _publish(out, path, fmt, partition_by)
     return int(n_files)
 
 
@@ -216,10 +220,8 @@ def write_cdc_snapshot(
     at ``path`` — :func:`write_upsert_snapshot` extended with delete
     tombstones via operators.dedup.cdc_apply: per key the LAST change
     by ``order_col`` wins, a terminal D removes the key. Same
-    staging-dir swap; the stored snapshot never carries op/order
+    :func:`_publish` swap; the stored snapshot never carries op/order
     columns."""
-    from auto_trade_data_pipeline_spark.operators.dedup import cdc_apply, dedup_keep_last
-
     spark = changelog.sparkSession
     data_cols = [c for c in changelog.columns if c not in (op_col, order_col)]
     if _path_exists(spark, path):
@@ -230,11 +232,4 @@ def write_cdc_snapshot(
     else:
         last = dedup_keep_last(changelog, keys, [order_col])
         merged = last.filter(F.col(op_col) != "D").select(*data_cols)
-    staging = f"{path}.__staging_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").format(fmt).save(staging)
-    backup = f"{path}.__old_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, backup)
-    os.rename(staging, path)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
+    _publish(merged, path, fmt)

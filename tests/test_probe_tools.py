@@ -1,13 +1,12 @@
-"""The round-8 diagnostic instruments: probe_cc_bimodal's event-log
-digest (stage/job/GC/skew extraction, zstd rolling segments) and
-canary.py's contamination audit. These adjudicate every future
-perf number, so their parsing must not rot silently."""
+"""The diagnostic tools' parsing: the event-log digester
+``profile_query.digest`` (its job-window contract) and canary.py's
+contamination audit. These adjudicate every future perf number, so
+their parsing must not rot silently."""
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -15,54 +14,32 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
 import canary  # noqa: E402
-import probe_cc_bimodal as probe  # noqa: E402
+import profile_query  # noqa: E402
 
 
-def _write_eventlog(dirpath: str, app_id: str, compress: bool) -> None:
+def test_digest_job_count_narrows_to_each_window(tmp_path):
+    """``digest`` counts jobs from ``t0`` to the end of the log; the
+    narrowed count (``window_jobs``) is exact per window. Bounding
+    ``digest``'s jobs by ``t1`` in place would make the narrowed
+    counts negative here."""
+    windows = {"a": (1000, 2000), "b": (3000, 4000)}
+    submits = {"a": [1000, 1500, 1999], "b": [3000, 3900]}
     events = [
-        {"Event": "SparkListenerJobStart", "Job ID": 0, "Submission Time": 1000,
-         "Properties": {"spark.job.description": "round 1"},
-         "Stage Infos": [{"Stage ID": 0}]},
-        {"Event": "SparkListenerTaskEnd", "Stage ID": 0,
-         "Task Metrics": {"Executor Run Time": 100, "JVM GC Time": 10,
-                          "Executor CPU Time": 90_000_000}},
-        {"Event": "SparkListenerTaskEnd", "Stage ID": 0,
-         "Task Metrics": {"Executor Run Time": 300, "JVM GC Time": 20,
-                          "Executor CPU Time": 250_000_000}},
-        {"Event": "SparkListenerStageCompleted",
-         "Stage Info": {"Stage ID": 0, "Number of Tasks": 2,
-                        "Submission Time": 1000, "Completion Time": 1400}},
-        {"Event": "SparkListenerJobEnd", "Job ID": 0, "Completion Time": 1500},
+        {"Event": "SparkListenerJobStart", "Job ID": i, "Submission Time": t}
+        for i, t in enumerate([*submits["a"], *submits["b"], 5000])
     ]
-    app_dir = os.path.join(dirpath, f"eventlog_v2_{app_id}")
-    os.makedirs(app_dir)
-    raw = "\n".join(json.dumps(e) for e in events) + "\n"
-    if compress:
-        path = os.path.join(app_dir, f"events_1_{app_id}.zstd")
-        subprocess.run(["zstd", "-q", "-o", path], input=raw.encode(), check=True)
-    else:
-        with open(os.path.join(app_dir, f"events_1_{app_id}"), "w") as f:
-            f.write(raw)
-
-
-def test_digest_eventlog_parses_plain_and_zstd(tmp_path, monkeypatch):
-    monkeypatch.setattr(probe, "EVENTLOG_DIR", str(tmp_path))
-    for app_id, compress in (("local-1", False), ("local-2", True)):
-        _write_eventlog(str(tmp_path), app_id, compress)
-        d = probe.digest_eventlog(app_id)
-        assert d["n_jobs"] == 1 and d["n_stages"] == 1
-        assert d["total_gc_s"] == 0.03
-        assert d["total_run_s"] == 0.4
-        job = d["slowest_jobs"][0]
-        assert job["desc"] == "round 1" and job["sec"] == 0.5
-        stage = d["hottest_stages"][0]
-        # max task 300 ms / median 200 ms = 1.5 skew
-        assert stage["tasks"] == 2 and stage["skew"] == 1.5
-        assert stage["run_s"] == 0.4 and stage["gc_s"] == 0.03
-
-
-def test_digest_eventlog_missing_app():
-    assert "error" in probe.digest_eventlog("no-such-app")
+    for sid, (t0, t1) in enumerate(windows.values()):
+        events.append({"Event": "SparkListenerStageCompleted", "Stage Info": {
+            "Stage ID": sid, "Stage Name": f"s{sid}", "Number of Tasks": 1,
+            "Submission Time": t0 + 10, "Completion Time": t1 - 10}})
+    log = tmp_path / "events.jsonl"
+    log.write_text("\n".join(json.dumps(e) for e in events) + "\n")
+    for name, (t0, t1) in windows.items():
+        assert profile_query.window_jobs(str(log), t0, t1) == len(submits[name])
+        d = profile_query.digest(str(log), t0, t1)
+        assert d["n_stages"] == 1
+    # the raw count runs to the end of the log: 3 + 2 + 1 jobs from t0 of "a"
+    assert profile_query.digest(str(log), *windows["a"])["jobs"] == 6
 
 
 def test_canary_audit_gates(tmp_path):

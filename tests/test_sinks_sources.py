@@ -62,11 +62,15 @@ def test_upsert_snapshot_idempotent_and_keeps_last(spark, tmp_path):
     assert [r["price"] for r in out] == [99.0, 98.0]
 
 
+def _swap_residue(root) -> list[str]:
+    """Staging and backup directories a snapshot swap left under ``root``."""
+    tags = (".__staging_", ".__compact_", ".__old_")
+    return [p.name for p in root.iterdir() if any(t in p.name for t in tags)]
+
+
 def test_upsert_snapshot_uri_path_swaps_and_cleans_up(spark, tmp_path):
-    """The Hadoop-FS arm (URI paths): the swap must publish the merged
-    snapshot, check every rename result (round-5 advice — Hadoop
-    rename reports failure by returning false), and leave no staging
-    or backup residue behind."""
+    """Upsert onto a ``file://`` table: the swap publishes the merged
+    snapshot and leaves no staging or backup directory behind."""
     path = f"file://{tmp_path}/merged_uri"
     first = _ticks(spark, [("A", 10, 5, 1), ("A", 11, 6, 2)])
     write_upsert_snapshot(first, path, ["symbol", "timestamp"], "tick_id")
@@ -76,12 +80,44 @@ def test_upsert_snapshot_uri_path_swaps_and_cleans_up(spark, tmp_path):
     write_upsert_snapshot(second, path, ["symbol", "timestamp"], "tick_id")
     out = spark.read.parquet(path).orderBy("timestamp").collect()
     assert [r["price"] for r in out] == [99.0, 11.0]
-    residue = [
-        p.name
-        for p in tmp_path.iterdir()
-        if p.name.startswith("merged_uri.__")
-    ]
-    assert residue == []
+    assert _swap_residue(tmp_path) == []
+
+
+def test_cdc_snapshot_uri_path_applies_twice_and_cleans_up(spark, tmp_path):
+    """A CDC apply onto a ``file://`` table publishes through the same
+    checked swap as the upsert: the second apply replaces the first
+    snapshot, a tombstone removes its key, and no staging or backup
+    directory is left behind."""
+    from auto_trade_data_pipeline_spark.sinks import write_cdc_snapshot
+
+    path = f"file://{tmp_path}/cdc_uri"
+    schema = "k int, v string, seq int, op string"
+    first = spark.createDataFrame([(1, "a", 1, "I"), (2, "b", 1, "I")], schema)
+    write_cdc_snapshot(first, path, ["k"], "seq")
+    second = spark.createDataFrame([(1, "A", 2, "U"), (2, None, 2, "D"), (3, "c", 2, "I")], schema)
+    write_cdc_snapshot(second, path, ["k"], "seq")
+    back = spark.read.parquet(path)
+    assert back.columns == ["k", "v"]
+    assert {tuple(r) for r in back.collect()} == {(1, "A"), (3, "c")}
+    assert _swap_residue(tmp_path) == []
+
+
+def test_compact_table_uri_path_swaps_and_cleans_up(spark, tmp_path):
+    """Compaction of a ``file://`` table: rows kept, files merged, no
+    staging or backup directory left behind."""
+    import glob
+
+    from auto_trade_data_pipeline_spark.sinks import compact_table, write_append
+
+    local = str(tmp_path / "cmp")
+    write_append(_ticks(spark, [("A", 10, 5, 1), ("B", 11, 6, 2)]).repartition(2), local)
+    write_append(_ticks(spark, [("C", 12, 7, 3)]), local)
+    assert len(glob.glob(f"{local}/part-*.parquet")) >= 2
+    path = f"file://{local}"
+    assert compact_table(spark, path, target_bytes=1 << 30) == 1
+    assert len(glob.glob(f"{local}/part-*.parquet")) == 1
+    assert sorted(r.tick_id for r in spark.read.parquet(path).collect()) == [1, 2, 3]
+    assert _swap_residue(tmp_path) == []
 
 
 def test_write_split_single_pass_partitions(spark, tmp_path):

@@ -1,37 +1,30 @@
-"""Marker-store transports for the exactly-once streaming sinks.
+"""Commit markers and the foreachBatch apply of the exactly-once
+streaming sinks.
 
-Round 4 refused remote URIs outright (markers were driver-local
-os.rename files); round 5 routes URI paths through the Hadoop
-FileSystem API so hdfs://, s3a://, and file:// tables keep their
-markers next to the table on the same store. The round trip is proven
-against a file:// URI, which exercises the exact same JVM code path
-(Path.getFileSystem -> create/rename/exists/listStatus) as a remote
-scheme.
+Every table path, plain or URI, takes one marker transport: the Hadoop
+FileSystem API of the session JVM. The tests run it on a plain path and
+on a ``file://`` URI; a remote scheme (``hdfs://``, ``s3a://``) goes
+through the same ``Path.getFileSystem`` calls.
 """
 
 from __future__ import annotations
 
 import os
 
-
-def test_marker_store_local_and_uri_transport_selection(tmp_path):
-    from auto_trade_data_pipeline_spark.streaming.sink import _MarkerStore
-
-    assert _MarkerStore(str(tmp_path / "t")).remote is False
-    assert _MarkerStore(f"file://{tmp_path}/t").remote is True
-    assert _MarkerStore("s3a://bucket/table").remote is True
+import pytest
 
 
-def test_marker_roundtrip_via_hadoop_fs_api(spark, tmp_path):
-    """Round-4 verdict item 4: commit / exists / committed through
-    the Hadoop FileSystem API against a file:// URI — and the marker
-    files land where the local-path transport can see them too."""
+@pytest.mark.parametrize("uri", [False, True], ids=["plain", "file_uri"])
+def test_marker_roundtrip_via_hadoop_fs_api(spark, tmp_path, uri):
+    """commit / exists / committed on one table path; markers are
+    single entries next to the table, and a marker an older table
+    wrote as a file still counts."""
     from auto_trade_data_pipeline_spark.streaming.sink import (
         _MarkerStore,
         committed_batches,
     )
 
-    table = f"file://{tmp_path}/t"
+    table = f"file://{tmp_path}/t" if uri else str(tmp_path / "t")
     store = _MarkerStore(table, spark=spark)
     assert store.committed() == set()
     assert not store.exists(0)
@@ -39,18 +32,18 @@ def test_marker_roundtrip_via_hadoop_fs_api(spark, tmp_path):
     store.commit(7)
     assert store.exists(0) and store.exists(7) and not store.exists(3)
     assert store.committed() == {0, 7}
-    # re-commit is idempotent (rename onto an existing marker)
+    # re-commit is an idempotent no-op
     store.commit(7)
     assert store.committed() == {0, 7}
-    # the markers are real files next to the table dir (ignore the
-    # ChecksumFileSystem's .crc sidecars)
-    local = str(tmp_path / "t.__commits")
-    names = [n for n in os.listdir(local) if not n.startswith(".")]
-    assert sorted(names) == ["0", "7"]
-    # no stray tmp files left behind
-    assert not [n for n in os.listdir(local) if "__tmp" in n]
-    # and the public helper reads them through the same URI
-    assert committed_batches(table) == {0, 7}
+    # the markers sit next to the table dir, nothing else beside them
+    # (ignore the ChecksumFileSystem's .crc sidecars)
+    local = tmp_path / "t.__commits"
+    assert sorted(n for n in os.listdir(local) if not n.startswith(".")) == ["0", "7"]
+    # a marker written as a file (the older form) is read too
+    (local / "3").write_text("committed")
+    assert store.exists(3)
+    # and the public helper reads them through the same path
+    assert committed_batches(table) == {0, 3, 7}
 
 
 def test_stream_upsert_exactly_once_via_file_uri(spark, tmp_path):
@@ -66,6 +59,29 @@ def test_stream_upsert_exactly_once_via_file_uri(spark, tmp_path):
     assert apply_upsert_batch(b1, 1, table, ["k"], "ts") is True
     got = {(r.k, r.v) for r in spark.read.parquet(table).collect()}
     assert got == {(1, "a"), (2, "B")}
+
+
+def test_stream_cdc_exactly_once_via_file_uri(spark, tmp_path):
+    """The CDC apply against a file:// table: a replayed batch id is
+    skipped even when its rows differ, the next batch applies with
+    tombstones, and the swaps leave no staging or backup directory."""
+    from auto_trade_data_pipeline_spark.streaming.sink import (
+        apply_cdc_batch,
+        committed_batches,
+    )
+
+    table = f"file://{tmp_path}/cdc"
+    schema = "k int, v string, seq int, op string"
+    b0 = spark.createDataFrame([(1, "a", 1, "I"), (2, "b", 1, "I")], schema)
+    assert apply_cdc_batch(b0, 0, table, ["k"], "seq") is True
+    garbage = spark.createDataFrame([(1, "zz", 9, "D")], schema)
+    assert apply_cdc_batch(garbage, 0, table, ["k"], "seq") is False  # replay skipped
+    b1 = spark.createDataFrame([(2, None, 2, "D"), (3, "c", 2, "I")], schema)
+    assert apply_cdc_batch(b1, 1, table, ["k"], "seq") is True
+    assert {tuple(r) for r in spark.read.parquet(table).collect()} == {(1, "a"), (3, "c")}
+    assert committed_batches(table) == {0, 1}
+    tags = (".__staging_", ".__old_")
+    assert [p.name for p in tmp_path.iterdir() if any(t in p.name for t in tags)] == []
 
 
 def test_redrain_with_fresh_checkpoint_skips_marked_batches(spark, sf_small, tmp_path):

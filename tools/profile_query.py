@@ -23,7 +23,14 @@ sys.path.insert(0, _REPO)
 
 
 def digest(log_path: str, t0_ms: float, t1_ms: float) -> dict:
-    """Summarize one pass's window of the event log."""
+    """Summarize the ``[t0_ms, t1_ms]`` window of the event log.
+
+    Stages and task metrics are bounded by both ends of the window, but
+    ``jobs`` counts every job submitted from ``t0_ms`` on, to the end of
+    the log. A caller narrows it to the window by subtracting
+    ``digest(log_path, t1_ms, inf)["jobs"]`` (:func:`window_jobs`;
+    ``perfbench/tracing.window_digests`` does the same), so bounding
+    ``jobs`` by ``t1_ms`` here would break those differences."""
     jobs = 0
     stages = []  # (stage_id, name, submit, complete, tasks)
     task_time = {}
@@ -88,6 +95,11 @@ def digest(log_path: str, t0_ms: float, t1_ms: float) -> dict:
             for sid, name, sub, comp, ntask in stages
         ],
     }
+
+
+def window_jobs(log_path: str, t0_ms: float, t1_ms: float) -> int:
+    """Jobs submitted inside ``[t0_ms, t1_ms)``."""
+    return digest(log_path, t0_ms, t1_ms)["jobs"] - digest(log_path, t1_ms, float("inf"))["jobs"]
 
 
 def main() -> int:
@@ -166,7 +178,8 @@ def main() -> int:
 
     for name, (dt, t0ms, t1ms) in results.items():
         d = digest(log_path, t0ms, t1ms)
-        print(f"\n=== {name}: {dt:.3f}s, {d['jobs']} jobs, {d['n_stages']} stages ===")
+        jobs = window_jobs(log_path, t0ms, t1ms)
+        print(f"\n=== {name}: {dt:.3f}s, {jobs} jobs, {d['n_stages']} stages ===")
         print(f"{'stage':>6} {'span_ms':>8} {'task_ms':>8} {'tasks':>6} {'shR_kb':>8} {'shW_kb':>8}  name")
         for s in d["stages"][:20]:
             print(
