@@ -225,9 +225,9 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     same semantics as a range join — declarative form vs the bounded
     fan-out the engine prefers at 100 TB.
 
-    At extreme scale, swap exact distinct for per-day HLL sketches
-    unioned over the window (the table_profile HLL path shows the
-    sketch discipline); this query keeps the exact answer so the
+    At extreme scale, swap exact distinct for per-day mergeable
+    distinct sketches unioned over the window (the KMV sketches in
+    operators/sketch.py); this query keeps the exact answer so the
     oracle can pin it."""
     ev = load_table(spark, sf_dir, "events")
     du = ev.select(F.to_date("ts").alias("d"), "user_id").distinct()

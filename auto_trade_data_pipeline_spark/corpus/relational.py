@@ -574,13 +574,10 @@ def table_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE `orders`: per-column rows/nulls/exact-distinct/lexical
     min-max in one pass (operators/profile.py) — stack-unpivot then a
     single shuffle keyed by column name. The exact distinct shuffles
-    the (stringified) values — the honest cost of an exact answer;
-    the `exact=False` HLL path is the fact-scale production variant
-    (sketches merge map-side; shuffle is k sketches, not k x n
-    values)."""
+    the (stringified) values — the honest cost of an exact answer."""
     from auto_trade_data_pipeline_spark.operators.profile import table_profile
 
-    return table_profile(load_table(spark, sf_dir, "orders"), exact=True)
+    return table_profile(load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------

@@ -359,7 +359,7 @@ def validation_split_invalid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quarantine side of the validation split
     (``src/fetch_historical_trades_nvda.py:102-138``): null/range
     violations diverted, one scan, two sinks."""
-    inv = validate_split(_injected_ticks(spark, sf_dir), tick_valid_predicate(), cache=False).invalid
+    inv = validate_split(_injected_ticks(spark, sf_dir), tick_valid_predicate()).invalid
     return inv.select(
         "symbol", _fmt("timestamp", micros=True).alias("ts"), "price", "volume", "tick_id"
     )

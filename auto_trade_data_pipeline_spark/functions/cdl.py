@@ -65,14 +65,6 @@ def _shift(a: np.ndarray, k: int) -> np.ndarray:
     return out
 
 
-def _shift_bool(a: np.ndarray, k: int) -> np.ndarray:
-    if k == 0:
-        return a
-    out = np.zeros(len(a), dtype=bool)
-    out[k:] = a[:-k]
-    return out
-
-
 class _Ctx:
     """Per-series candle anatomy + memoized setting averages."""
 

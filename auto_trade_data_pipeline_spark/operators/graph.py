@@ -25,7 +25,6 @@ from pyspark.sql.window import Window
 
 __all__ = [
     "connected_components",
-    "connected_components_star",
     "component_sizes",
     "pagerank",
     "triangle_counts",
@@ -136,7 +135,8 @@ def connected_components(
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds — "
-        "graph diameter exceeds the near-dup regime; use large-star/small-star"
+        "graph diameter exceeds the near-dup regime; long chains need the "
+        "O(log n)-round large-star/small-star algorithm (Kiveris et al., SoCC'14)"
     )
 
 
@@ -198,85 +198,6 @@ def kcore_prune(
         )
     return cur.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("core_deg")
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    edge rewriting (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14) — O(log n) rounds on ANY graph shape, the
-    scale answer where min-label propagation's O(diameter) rounds
-    break down (long chains: a 10^6-node path is ~20 star rounds vs
-    10^6 propagation rounds).
-
-    Each phase is one groupBy over the (conditionally) symmetrized
-    edge list: attach min(neighborhood ∪ self) per node, rewrite
-    edges to point at it. Large-star hangs every LARGER neighbor onto
-    the local min; small-star re-hangs the smaller neighbors and the
-    node itself. The graph converges to a forest of depth-1 stars
-    whose centers are the component minima; convergence is probed
-    with a count+checksum aggregate (never a collect of edges), and
-    every round is localCheckpoint'ed to truncate lineage (iterative
-    joins otherwise double the plan per round).
-
-    Returns (node, component), component = min reachable node id —
-    identical to `connected_components` output, asserted equal in
-    tests on matched inputs."""
-
-    def _star(e: DataFrame, large: bool) -> DataFrame:
-        # Neighborhoods: large-star works on the full symmetric list,
-        # small-star only on edges oriented high->low (u > v).
-        if large:
-            und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        else:
-            und = e.filter(F.col("u") > F.col("v"))
-        m = und.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        nbrs = und.join(m, "u")
-        if large:
-            # Hang strictly-larger neighbors onto the local min.
-            out = nbrs.filter(F.col("v") > F.col("u")).select(
-                F.col("v").alias("u"), F.col("m").alias("v")
-            )
-        else:
-            # Re-hang the small neighbors AND the node itself.
-            out = nbrs.select(F.col("v").alias("u"), F.col("m").alias("v")).unionByName(
-                m.select(F.col("u"), F.col("m").alias("v"))
-            )
-        return out.filter(F.col("u") != F.col("v")).distinct()
-
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_sig = None
-    for _ in range(max_iters):
-        # Lazy checkpoint: the signature aggregate below scans every
-        # row, materializing the checkpoint in the same job as the
-        # convergence probe (one job per round, not two).
-        e = _star(_star(e, large=True), large=False).localCheckpoint(eager=False)
-        sig = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # Order-independent, overflow-free set checksum (edges are
-            # distinct, so XOR cannot cancel a duplicate).
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-        ).first()
-        if prev_sig == (sig.n, sig.h):
-            # Fixpoint: every edge now points child -> component min.
-            members = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-            centers = e.select(F.col("v").alias("node")).distinct().withColumn(
-                "component", F.col("node")
-            )
-            return members.unionByName(centers)
-        prev_sig = (sig.n, sig.h)
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iters} rounds"
     )
 
 

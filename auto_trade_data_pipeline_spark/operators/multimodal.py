@@ -71,44 +71,11 @@ def fake_decode_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
         )
 
 
-def pil_decode_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL decoder, used when Pillow is installed (it is not in this
-    container — the import stays inside the worker function so the
-    module imports everywhere and fails loudly only when selected).
-    Identical batch contract and output schema as the stand-in."""
-    import io
-
-    from PIL import Image  # noqa: F401 — ImportError is the contract
-
-    for pdf in batches:
-        widths, heights, channels = [], [], []
-        for payload in pdf["payload"]:
-            with Image.open(io.BytesIO(bytes(payload))) as img:
-                widths.append(img.size[0])
-                heights.append(img.size[1])
-                channels.append(len(img.getbands()))
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["meta"].map(lambda m: m["doc_id"]),
-                "lang": pdf["meta"].map(lambda m: m["lang"]),
-                "n_bytes": pdf["payload"].map(len).astype("int32"),
-                "width": pd.Series(widths, index=pdf.index, dtype="int32"),
-                "height": pd.Series(heights, index=pdf.index, dtype="int32"),
-                "channels": pd.Series(channels, index=pdf.index, dtype="int32"),
-            }
-        )
-
-
-def decode_stats(docs: DataFrame, codec: str = "stub") -> DataFrame:
+def decode_stats(docs: DataFrame) -> DataFrame:
     """Binary payload -> per-document decode features via mapInPandas
-    (Arrow-batched; one Python worker per task, no driver collect).
-
-    ``codec="pil"`` selects the real Pillow decoder (raises
-    ImportError per-task where Pillow is absent — never a silent
-    wrong answer); ``"stub"`` is the deterministic stand-in this
-    container can execute and the oracle reproduces."""
-    kernel = {"stub": fake_decode_stats, "pil": pil_decode_stats}[codec]
-    return attach_payload(docs).mapInPandas(kernel, schema=DECODE_SCHEMA)
+    (Arrow-batched; one Python worker per task, no driver collect),
+    decoded by the deterministic stand-in the oracle reproduces."""
+    return attach_payload(docs).mapInPandas(fake_decode_stats, schema=DECODE_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_off int, frame_len int, frame_hash bigint"

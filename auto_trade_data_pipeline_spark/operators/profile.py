@@ -5,10 +5,7 @@ Shape: `stack()` unpivots the k columns to (column_name, value:string)
 rows — an EXPAND, k x input rows, all map-side — then one shuffle
 keyed by column_name computes every stat. An exact per-column distinct
 count is inherently a shuffle of the values (there is no cheaper exact
-answer); the production variant swaps `approx_count_distinct` (HLL
-sketch, mergeable map-side, shuffle carries k sketches instead of
-k x n values) via ``exact=False`` — same output schema, oracle-
-checkable only in the exact form.
+answer), and the exact count is what keeps the profile oracle-checkable.
 
 Values are compared as strings (lexical min/max) so one operator
 covers every column type; numeric-typed extrema belong to the query
@@ -23,20 +20,16 @@ from pyspark.sql import functions as F
 __all__ = ["table_profile"]
 
 
-def table_profile(df: DataFrame, exact: bool = True) -> DataFrame:
+def table_profile(df: DataFrame) -> DataFrame:
     """One row per column: (column_name, n_rows, n_nulls, n_distinct,
-    min_value, max_value). `exact=False` switches the distinct count
-    to the HLL sketch path for fact-scale profiling."""
+    min_value, max_value)."""
     cols = df.columns
     pairs = ", ".join(f"'{c}', CAST(`{c}` AS STRING)" for c in cols)
     long = df.selectExpr(f"stack({len(cols)}, {pairs}) AS (column_name, value)")
-    n_distinct = (
-        F.count_distinct(F.col("value")) if exact else F.approx_count_distinct("value")
-    )
     return long.groupBy("column_name").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.when(F.col("value").isNull(), 1).otherwise(0)).alias("n_nulls"),
-        n_distinct.alias("n_distinct"),
+        F.count_distinct(F.col("value")).alias("n_distinct"),
         F.min("value").alias("min_value"),
         F.max("value").alias("max_value"),
     )

@@ -19,7 +19,7 @@ sketches.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -28,6 +28,7 @@ from auto_trade_data_pipeline_spark.operators.text import hash64
 __all__ = [
     "KMV_SPACE",
     "kmv_sketch",
+    "kmv_estimate_col",
     "kmv_estimate",
     "kmv_pair_overlap",
     "cms_bucket_array",
@@ -62,19 +63,26 @@ def kmv_sketch(
     )
 
 
+def kmv_estimate_col(k: int) -> Column:
+    """The KMV distinct-count estimate over a sketch summary's
+    ``sketch_n`` (retained hashes) and ``kth_hv`` (k-th smallest hash)
+    columns: (k-1) * space / kth_hv when the sketch is full, else the
+    exact retained count (a sketch with fewer than k hashes IS the
+    distinct set); rounded to 4 places."""
+    est = F.when(F.col("sketch_n") < k, F.col("sketch_n").cast("double")).otherwise(
+        F.lit(float(k - 1)) * F.lit(KMV_SPACE) / F.col("kth_hv")
+    )
+    return F.round(est, 4)
+
+
 def kmv_estimate(sketch: DataFrame, group_col: str, k: int = 64) -> DataFrame:
-    """Distinct-count estimate per group from a bottom-k sketch:
-    (k-1) * space / kth_min when the sketch is full, else the exact
-    retained count (a sketch with fewer than k hashes IS the distinct
-    set). Returns (group, sketch_n, est_distinct)."""
+    """Distinct-count estimate per group from a bottom-k sketch
+    (`kmv_estimate_col`). Returns (group, sketch_n, est_distinct)."""
     agg = sketch.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("sketch_n"),
         F.max(F.when(F.col("r") == k, F.col("hv"))).alias("kth_hv"),
     )
-    est = F.when(F.col("sketch_n") < k, F.col("sketch_n").cast("double")).otherwise(
-        F.lit(float(k - 1)) * F.lit(KMV_SPACE) / F.col("kth_hv")
-    )
-    return agg.select(group_col, "sketch_n", F.round(est, 4).alias("est_distinct"))
+    return agg.select(group_col, "sketch_n", kmv_estimate_col(k).alias("est_distinct"))
 
 
 def kmv_pair_overlap(sketch: DataFrame, group_col: str, k: int = 64) -> DataFrame:

@@ -34,11 +34,9 @@ __all__ = [
     "hash64",
     "exact_dedup",
     "shingle_rows",
-    "minhash_signature",
     "minhash_signature_rows",
     "lsh_candidate_pairs",
     "lsh_candidate_pairs_between",
-    "jaccard_verify",
     "jaccard_verify_rows",
     "simhash32",
     "simhash_candidate_pairs",
@@ -183,8 +181,9 @@ def minhash_cols_expr(shingles: Column, num_perms: int) -> list[Column]:
     """The ``num_perms`` minhash signature values as PURE per-row
     expressions (array_min over a transformed shingle array) — no
     aggregation, so the signature is computable on a streaming
-    DataFrame. Identical arithmetic to `_minhash_aggs` (same md5 base
-    hash, same universal-hash family), hence identical signatures."""
+    DataFrame. Identical arithmetic to `minhash_signature_rows` (same
+    md5 base hash, same universal-hash family), hence identical
+    signatures."""
     base = lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")  # noqa: E731
     out = []
     for p in range(num_perms):
@@ -197,39 +196,21 @@ def minhash_cols_expr(shingles: Column, num_perms: int) -> list[Column]:
     return out
 
 
-def _minhash_aggs(num_perms: int) -> list[Column]:
-    base = F.conv(F.substring(F.md5(F.col("__sh")), 1, 8), 16, 10).cast("long")
-    out = []
-    for p in range(num_perms):
-        a, b = minhash_coeffs(p)
-        out.append(F.min((base * a + b) % MINHASH_PRIME).alias(f"mh{p}"))
-    return out
-
-
-def minhash_signature(
-    df: DataFrame, shingles_col: str, id_col: str, num_perms: int
+def minhash_signature_rows(
+    rows: DataFrame, shingle_col: str, id_col: str, num_perms: int
 ) -> DataFrame:
-    """MinHash signature from per-doc shingle ARRAYS: explode, hash
+    """MinHash signature from (id, shingle) ROWS (`shingle_rows`): hash
     each shingle ONCE (md5 -> 32-bit int), then derive all
     `num_perms` permutations with the universal-hash family — one
     groupBy, `num_perms` cheap arithmetic mins, a single shuffle
     keyed by doc id. (20 salted md5s per shingle would cost 20x the
     CPU for the same guarantee.)"""
-    exploded = df.select(F.col(id_col), F.explode(shingles_col).alias("__sh"))
-    return exploded.groupBy(id_col).agg(*_minhash_aggs(num_perms))
-
-
-def minhash_signature_rows(
-    rows: DataFrame, shingle_col: str, id_col: str, num_perms: int
-) -> DataFrame:
-    """MinHash signature from (id, shingle) ROWS (`shingle_rows`) —
-    the codegen-friendly production path; identical output to
-    `minhash_signature` on matching shingle sets."""
-    return (
-        rows.select(F.col(id_col), F.col(shingle_col).alias("__sh"))
-        .groupBy(id_col)
-        .agg(*_minhash_aggs(num_perms))
-    )
+    base = F.conv(F.substring(F.md5(F.col(shingle_col)), 1, 8), 16, 10).cast("long")
+    mins = []
+    for p in range(num_perms):
+        a, b = minhash_coeffs(p)
+        mins.append(F.min((base * a + b) % MINHASH_PRIME).alias(f"mh{p}"))
+    return rows.groupBy(id_col).agg(*mins)
 
 
 def _banded(sig: DataFrame, id_col: str, num_perms: int, rows_per_band: int) -> DataFrame:
@@ -303,28 +284,6 @@ def lsh_candidate_pairs_between(
         .filter(F.col("id_a") != F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
-    )
-
-
-def jaccard_verify(
-    pairs: DataFrame, shingled: DataFrame, id_col: str, shingles_col: str, threshold: float
-) -> DataFrame:
-    """Exact Jaccard over the candidate pairs only (never all-pairs):
-    two hash joins to fetch shingle sets, set math JVM-side. Emits
-    (id_a, id_b, jaccard) for pairs >= threshold."""
-    sh = shingled.select(F.col(id_col), F.col(shingles_col).alias("__sh"))
-    joined = (
-        pairs.join(sh.withColumnRenamed("__sh", "__sh_a"), pairs.id_a == sh[id_col])
-        .drop(id_col)
-        .join(sh.withColumnRenamed("__sh", "__sh_b"), pairs.id_b == sh[id_col])
-        .drop(id_col)
-    )
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
-    return (
-        joined.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
     )
 
 
@@ -475,8 +434,7 @@ def jaccard_verify_rows(
     """Exact Jaccard over candidate pairs from (id, shingle) ROWS —
     no arrays anywhere: intersection size is a pair-keyed count of
     matching shingle rows (two hash joins), set sizes come from a
-    per-doc count. Emits (id_a, id_b, jaccard) for pairs >= threshold
-    — identical output to the array-based `jaccard_verify`.
+    per-doc count. Emits (id_a, id_b, jaccard) for pairs >= threshold.
 
     100 TB shape: candidate pairs are LSH-bucket sized, and the
     shuffles carry (id, shingle-hash-sized) rows — a document's

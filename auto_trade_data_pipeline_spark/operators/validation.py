@@ -63,19 +63,16 @@ def candle_valid_predicate() -> Column:
     )
 
 
-def validate_split(df: DataFrame, predicate: Column, cache: bool = False) -> SplitResult:
+def validate_split(df: DataFrame, predicate: Column) -> SplitResult:
     """Split into (valid, invalid) on one predicate — S9.
 
-    Default is NOT cached: caching a full input scan is wrong at 100 TB.
-    The scale-correct side-output pattern is a single flag-partitioned
-    write (see :func:`sinks.write_split`); pass ``cache=True`` only for
-    small inputs consumed twice in the same job.
+    NOT cached: caching a full input scan is wrong at 100 TB. The
+    scale-correct side-output pattern is a single flag-partitioned
+    write (see :func:`sinks.write_split`).
     Null predicate results count as invalid (reference drops them via
     dropna, ``src/fetch_historical_trades_nvda.py:225``).
     """
     flagged = df.withColumn("__valid", F.coalesce(predicate, F.lit(False)))
-    if cache:
-        flagged = flagged.cache()
     return SplitResult(
         valid=flagged.filter(F.col("__valid")).drop("__valid"),
         invalid=flagged.filter(~F.col("__valid")).drop("__valid"),
@@ -85,19 +82,14 @@ def validate_split(df: DataFrame, predicate: Column, cache: bool = False) -> Spl
 def tick_quality_report(
     df: DataFrame,
     ts_str_col: str | None = None,
-    approx_distinct: bool = False,
     count_valid: Column | None = None,
 ) -> DataFrame:
     """Single-pass validation aggregate report (A5),
     ``src/fetch_historical_trades_nvda.py:294-312``: null counts,
     invalid-value counts, bad-timestamp count, distinct timestamps,
     min/max span, total rows.  One job, map-side partial aggregation.
-
-    ``approx_distinct=True`` swaps the exact distinct-timestamp count
-    for an HLL++ sketch (``approx_count_distinct``, default 5% rsd):
-    the exact count shuffles every distinct timestamp at 100 TB; the
-    sketch is fixed-size per partition and merges map-side — the
-    production default (the exact form remains for oracle parity).
+    The distinct-timestamp count is exact, so the report is
+    oracle-checkable.
 
     ``count_valid``: optional boolean predicate (e.g.
     :func:`tick_valid_predicate` with the strict P4 timestamp regex) —
@@ -107,11 +99,6 @@ def tick_quality_report(
         ~F.col(ts_str_col).rlike(r"^\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}\.\d{6} UTC$")
         if ts_str_col is not None
         else F.col("timestamp").isNull()
-    )
-    distinct_ts = (
-        F.approx_count_distinct("timestamp")
-        if approx_distinct
-        else F.countDistinct("timestamp")
     )
     extra = (
         [F.sum(F.when(F.coalesce(count_valid, F.lit(False)), 1).otherwise(0)).alias("valid_rows")]
@@ -126,7 +113,7 @@ def tick_quality_report(
         F.sum(F.when(F.col("price") <= 0, 1).otherwise(0)).alias("nonpositive_price"),
         F.sum(F.when(F.col("volume") < 0, 1).otherwise(0)).alias("negative_volume"),
         F.sum(F.when(F.coalesce(bad_ts, F.lit(True)), 1).otherwise(0)).alias("bad_timestamp"),
-        distinct_ts.alias("distinct_timestamps"),
+        F.countDistinct("timestamp").alias("distinct_timestamps"),
         F.min("timestamp").alias("min_timestamp"),
         F.max("timestamp").alias("max_timestamp"),
     )

@@ -202,42 +202,3 @@ def read_candles(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFr
     else:
         df = spark.read.schema(schemas.CANDLES).parquet(path)
     return schemas.assert_schema(df, schemas.CANDLES, table="candles")
-
-
-def read_evolved(
-    spark: SparkSession,
-    path: str,
-    expected_schema: str | None = None,
-    fill_defaults: dict | None = None,
-) -> DataFrame:
-    """Schema-evolution read: union parquet files written under
-    DIFFERENT schema versions (columns added over time) into one
-    frame via footer-schema merging, then optionally (a) assert the
-    merged schema is a subset of `expected_schema` (DDL string) —
-    unexpected columns fail LOUDLY instead of flowing downstream —
-    and (b) fill nulls in late-added columns with `fill_defaults`.
-
-    Scale note: `mergeSchema` reads every file footer once at
-    planning time (a metadata operation, not a data scan); readers of
-    old files project the missing columns as nulls, so no rewrite of
-    historical data is needed when a column is added. Type CHANGES
-    (vs additions) are rejected by Spark's footer merge itself —
-    the correct failure mode; migrate with an explicit cast job.
-    """
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    if expected_schema is not None:
-        from pyspark.sql.types import StructType
-
-        expected = {f.name: f.dataType for f in StructType.fromDDL(expected_schema)}
-        for f in df.schema.fields:
-            if f.name not in expected:
-                raise ValueError(
-                    f"unexpected column {f.name!r} in evolved table at {path}"
-                )
-            if f.dataType != expected[f.name]:
-                raise ValueError(
-                    f"column {f.name!r} type drift: {f.dataType} != {expected[f.name]}"
-                )
-    if fill_defaults:
-        df = df.fillna(fill_defaults)
-    return df

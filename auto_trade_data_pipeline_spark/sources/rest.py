@@ -158,27 +158,3 @@ def fetch_trades(
         "symbol string, timestamp timestamp, price double, volume double, tick_id long"
     )
     return plan.repartition("symbol", "date").mapInPandas(_run, schema=schema)
-
-
-def columnar_pages_to_rows(pages: DataFrame) -> DataFrame:
-    """P1 declarative form: explode a table of columnar pages
-    (symbol, t: array<bigint> epoch-ms, p: array<double>,
-    v: array<double>) into tick rows via arrays_zip + explode —
-    Generate node, JVM-side, no Python
-    (``src/fetch_historical_trades_nvda.py:155-160`` does this with a
-    pandas zip; the mapInPandas source above does it vectorized).
-    Tick ids are per-page positions offset by the page's `skip`."""
-    from pyspark.sql import functions as F
-
-    zipped = pages.select(
-        "symbol",
-        F.col("skip"),
-        F.posexplode(F.arrays_zip("t", "p", "v")).alias("pos", "z"),
-    )
-    return zipped.select(
-        "symbol",
-        F.timestamp_millis(F.col("z.t")).alias("timestamp"),
-        F.col("z.p").alias("price"),
-        F.col("z.v").alias("volume"),
-        (F.col("skip") + F.col("pos")).alias("tick_id"),
-    )

@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from auto_trade_data_pipeline_spark.operators.sketch import kmv_estimate_col
+
 __all__ = [
     "streaming_kmv_sketch",
     "streaming_kmv_quantile",
@@ -102,13 +104,10 @@ def streaming_kmv_sketch(values: DataFrame, group_col: str, k: int = 64) -> Data
     )
 
 
-def kmv_estimate_cols(df: DataFrame, k: int, space: float = float(1 << 60)) -> DataFrame:
-    """Attach the KMV estimate to sketch-summary rows (same formula as
-    operators.sketch.kmv_estimate)."""
-    est = F.when(F.col("sketch_n") < k, F.col("sketch_n").cast("double")).otherwise(
-        F.lit(float(k - 1)) * F.lit(space) / F.col("kth_hv")
-    )
-    return df.withColumn("est_distinct", F.round(est, 4))
+def kmv_estimate_cols(df: DataFrame, k: int) -> DataFrame:
+    """Attach the KMV estimate (`operators.sketch.kmv_estimate_col`) to
+    sketch-summary rows as ``est_distinct``."""
+    return df.withColumn("est_distinct", kmv_estimate_col(k))
 
 
 # ---------------------------------------------------------------------------

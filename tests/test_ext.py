@@ -33,12 +33,10 @@ def test_minhash_lsh_finds_planted_near_dups(spark):
     near = base.replace("today", "tomorrow")
     far = "completely different content about spark shuffles and parquet files"
     df = _docs(spark, [(1, base), (2, near), (3, far)])
-    shingled = df.select(
-        "doc_id", TX.word_shingles(TX.tokens(F.col("text")), 3).alias("sh")
-    )
-    sig = TX.minhash_signature(shingled, "sh", "doc_id", 20)
+    rows = TX.shingle_rows(df, "text", "doc_id", 3)
+    sig = TX.minhash_signature_rows(rows, "shingle", "doc_id", 20)
     pairs = TX.lsh_candidate_pairs(sig, "doc_id", 20, 2)
-    verified = TX.jaccard_verify(pairs, shingled, "doc_id", "sh", 0.3).collect()
+    verified = TX.jaccard_verify_rows(pairs, rows, "doc_id", "shingle", 0.3).collect()
     assert {(r["id_a"], r["id_b"]) for r in verified} == {(1, 2)}
 
 
@@ -264,36 +262,6 @@ def test_winnow_overlap_drops_boilerplate_fingerprints(spark):
     assert all(a >= 100 for a, _ in pairs), f"boilerplate-only pair leaked: {pairs}"
 
 
-def test_decode_stats_codec_selection(spark):
-    """codec='pil' must select the real decoder and fail LOUDLY where
-    Pillow is absent (never silently fall back to the stand-in); the
-    stub path stays the deterministic default. The ImportError is
-    asserted on the kernel directly (driver-side) — running it as a
-    Spark task would deliberately crash Python workers and poison the
-    reusable-worker pool for subsequent tests."""
-    import pandas as _pd
-    import pytest as _pytest
-
-    from auto_trade_data_pipeline_spark.operators.multimodal import pil_decode_stats
-
-    df = spark.createDataFrame(
-        [(1, "en", "web", 5, "hello")],
-        "doc_id long, lang string, source string, n_chars long, text string",
-    )
-    assert decode_stats(df, codec="stub").count() == 1
-    assert decode_stats(df, codec="pil").schema == decode_stats(df, codec="stub").schema
-    try:
-        import PIL  # noqa: F401
-
-        has_pil = True
-    except ImportError:
-        has_pil = False
-    if not has_pil:
-        batch = _pd.DataFrame({"payload": [b"x"], "meta": [{"doc_id": 1, "lang": "en"}]})
-        with _pytest.raises(ImportError):
-            list(pil_decode_stats(iter([batch])))
-
-
 def test_duplicated_spans_planted_and_merged(spark):
     # Docs 1 and 2 share a 10-token run; doc 3 is clean. k=4 grams
     # over the run produce overlapping hits that must merge into ONE
@@ -378,8 +346,8 @@ def test_lsh_between_finds_cross_set_dups(spark):
     delta = _docs(spark, [(10, base.replace("today", "tomorrow")), (11, "fresh new text")])
 
     def sig(df):
-        rows = df.select("doc_id", TX.word_shingles(TX.tokens(F.col("text")), 3).alias("sh"))
-        return TX.minhash_signature(rows, "sh", "doc_id", 20)
+        rows = TX.shingle_rows(df, "text", "doc_id", 3)
+        return TX.minhash_signature_rows(rows, "shingle", "doc_id", 20)
 
     pairs = {
         (r["id_a"], r["id_b"])

@@ -4,12 +4,9 @@ stray sorts)."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from auto_trade_data_pipeline_spark.operators.candles import aggregate_candles
-from auto_trade_data_pipeline_spark.operators.validation import tick_quality_report
 from auto_trade_data_pipeline_spark.sources import load_table, ticks_from_events
 
 
@@ -73,15 +70,6 @@ def test_partitioned_sink_prunes_time_range_scan(spark, sf_small, tmp_path):
         F.col("timestamp").between("2024-01-08 00:00:00", "2024-01-09 23:59:59")
     ).count()
     assert rows == full  # the derived-date predicate drops no rows
-
-
-def test_quality_report_approx_is_sketch_and_close(spark, sf_small):
-    ticks = ticks_from_events(spark, sf_small)
-    exact = tick_quality_report(ticks).first()["distinct_timestamps"]
-    approx_df = tick_quality_report(ticks, approx_distinct=True)
-    assert "approx_count_distinct" in _plan(approx_df)
-    approx = approx_df.first()["distinct_timestamps"]
-    assert approx == pytest.approx(exact, rel=0.1)
 
 
 def test_window_family_single_exchange_single_window_op(spark, sf_med):

@@ -237,16 +237,26 @@ edges_strategy = st.lists(
 @given(edges=edges_strategy)
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 def test_cc_star_equals_propagation_on_random_graphs(edges):
-    from auto_trade_data_pipeline_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    """Min-label connected_components equals a pure-Python union-find:
+    every node carries the minimum id of its component."""
+    from auto_trade_data_pipeline_spark.operators.graph import connected_components
 
     es = [(u, v) for u, v in edges if u != v]
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for u, v in es:
+        ru, rv = find(u), find(v)
+        parent[max(ru, rv)] = min(ru, rv)
+    want = {x: find(x) for x in parent}
+
     df = _spark.createDataFrame(es, "id_a long, id_b long")
-    prop = {r.node: r.component for r in connected_components(df, max_iters=40).collect()}
-    star = {r.node: r.component for r in connected_components_star(df).collect()}
-    assert star == prop
+    got = {r.node: r.component for r in connected_components(df, max_iters=40).collect()}
+    assert got == want
 
 
 @given(

@@ -200,22 +200,6 @@ def test_fetch_trades_paginates_with_fake_client(spark):
     assert sorted(r["tick_id"] for r in out) == [0, 1, 2, 3]
 
 
-def test_columnar_pages_to_rows_declarative(spark):
-    from auto_trade_data_pipeline_spark.sources.rest import columnar_pages_to_rows
-
-    pages = spark.createDataFrame(
-        [
-            ("NVDA", 0, [1_704_207_600_000, 1_704_207_600_500], [10.0, 11.0], [1.0, 2.0]),
-            ("NVDA", 2, [1_704_207_601_000], [12.0], [3.0]),
-        ],
-        "symbol string, skip long, t array<bigint>, p array<double>, v array<double>",
-    )
-    rows = columnar_pages_to_rows(pages).orderBy("tick_id").collect()
-    assert [r["tick_id"] for r in rows] == [0, 1, 2]
-    assert [r["price"] for r in rows] == [10.0, 11.0, 12.0]
-    assert rows[0]["timestamp"].microsecond == 0 and rows[1]["timestamp"].microsecond == 500000
-
-
 def test_asof_join_property_vs_bruteforce(spark):
     """Property check: asof_join == per-row argmax of right rows at or
     before each left row, over a randomized fixture."""
@@ -507,46 +491,6 @@ def test_trade_rest_stream_drains_to_batch_parity(spark):
     finally:
         q.stop()
     assert sorted(map(tuple, spark.table("t_rest_stream").collect())) == want
-
-
-def test_schema_evolution_merge_read(spark, tmp_path):
-    """Files written under v1 (3 cols) and v2 (v1 + quality double)
-    merge into one frame; v1 rows surface the late-added column as
-    null (or the declared default); unexpected columns and type drift
-    fail loudly."""
-    import pytest as _pytest
-
-    from auto_trade_data_pipeline_spark.sources.files import read_evolved
-
-    d = str(tmp_path / "evolved")
-    v1 = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0)], "id long, sym string, price double"
-    )
-    v2 = spark.createDataFrame(
-        [(3, "c", 3.0, 0.9)], "id long, sym string, price double, quality double"
-    )
-    v1.coalesce(1).write.mode("append").parquet(d)
-    v2.coalesce(1).write.mode("append").parquet(d)
-
-    out = read_evolved(
-        spark,
-        d,
-        expected_schema="id long, sym string, price double, quality double",
-        fill_defaults={"quality": -1.0},
-    )
-    rows = {r.id: (r.sym, r.price, r.quality) for r in out.collect()}
-    assert rows == {1: ("a", 1.0, -1.0), 2: ("b", 2.0, -1.0), 3: ("c", 3.0, 0.9)}
-
-    # Unexpected column -> loud failure.
-    with _pytest.raises(ValueError, match="unexpected column"):
-        read_evolved(spark, d, expected_schema="id long, sym string, price double")
-
-    # Type drift (price declared int) -> loud failure.
-    with _pytest.raises(ValueError, match="type drift"):
-        read_evolved(
-            spark, d,
-            expected_schema="id long, sym string, price int, quality double",
-        )
 
 
 def test_fan_out_scan_reads_node_classes_not_plan_text(spark, tmp_path):

@@ -190,92 +190,6 @@ def test_interval_join_stream_equals_batch_across_splits(spark, tmp_path, splits
     assert len(w) == 120
 
 
-def test_tws_running_vwap_matches_applyinpandaswithstate(spark, tmp_path):
-    """The Spark-4 transformWithStateInPandas form must emit exactly
-    the applyInPandasWithState result — same per-batch rows, same
-    carried totals, same running VWAP — so both stateful APIs expose
-    one contract."""
-    # The TWS state-server protocol needs protobuf, absent from this
-    # container (see streaming/tws.py ENVIRONMENT GATE) — the operator
-    # plans without it, but query start would crash the driver worker.
-    pytest.importorskip("google.protobuf")
-    from auto_trade_data_pipeline_spark.streaming.tws import tws_running_vwap
-
-    rng = np.random.default_rng(11)
-    data_dir = tmp_path / "tws_in"
-    data_dir.mkdir()
-    for b in range(3):
-        pdf = pd.DataFrame(
-            {
-                "symbol": (["S"] * 40 + ["T"] * 10),
-                "timestamp": pd.date_range("2024-01-02 14:30:00", periods=50, freq="s")
-                + pd.Timedelta(minutes=b),
-                "price": rng.uniform(10, 20, 50),
-                "volume": rng.integers(1, 100, 50).astype(float),
-                "tick_id": np.arange(50) + 1000 * b,
-            }
-        )
-        spark.createDataFrame(pdf).coalesce(1).write.parquet(f"{tmp_path}/tws_b{b}")
-        import glob as _glob
-        import shutil as _shutil
-
-        for i, f in enumerate(_glob.glob(f"{tmp_path}/tws_b{b}/part-*.parquet")):
-            _shutil.copy(f, data_dir / f"file_{b}_{i}.parquet")
-
-    def _stream():
-        return (
-            spark.readStream.format("parquet")
-            .schema(
-                "symbol string, timestamp timestamp, price double, volume double, tick_id long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .load(str(data_dir))
-        )
-
-    tws_out = run_available_now(tws_running_vwap(_stream()), "t_tws_vwap", "update")
-    old_out = run_available_now(
-        streaming_running_vwap(_stream()), "t_aipws_vwap", "update"
-    )
-
-    def _canon_state(df):
-        return sorted(
-            (r["symbol"], r["batch_rows"], r["total_rows"],
-             None if r["running_vwap"] is None else round(r["running_vwap"], 9))
-            for r in df.collect()
-        )
-
-    assert _canon_state(tws_out) == _canon_state(old_out)
-    # State really carried: the last S row accumulates all 3 batches.
-    finals = {r["symbol"]: r["total_rows"] for r in tws_out.collect()
-              if r["total_rows"] == max(x["total_rows"] for x in tws_out.collect()
-                                        if x["symbol"] == r["symbol"])}
-    assert finals == {"S": 120, "T": 30}
-
-
-def test_tws_running_vwap_plans_without_start(spark, tmp_path):
-    """Plan-time contract for the Spark-4 stateful API (runs with or
-    without protobuf): the operator builds a streaming DataFrame with
-    the exact applyInPandasWithState output schema, so the two forms
-    are drop-in interchangeable."""
-    from auto_trade_data_pipeline_spark.streaming.tws import tws_running_vwap
-
-    d = tmp_path / "tws_plan_in"
-    d.mkdir()
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("symbol string, timestamp timestamp, price double, volume double, tick_id long")
-        .load(str(d))
-    )
-    out = tws_running_vwap(stream)
-    assert out.isStreaming
-    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
-        ("symbol", "string"),
-        ("batch_rows", "bigint"),
-        ("total_rows", "bigint"),
-        ("running_vwap", "double"),
-    ]
-
-
 # ---------------------------------------------------------------------------
 # Exactly-once foreachBatch upsert sink
 # ---------------------------------------------------------------------------

@@ -22,7 +22,7 @@ def test_split_partitions_input(spark):
         ("NVDA", datetime(2024, 1, 1, 0, 0, 5), 10.0, 0.0, 5),   # volume 0 is valid
     ]
     df = spark.createDataFrame(rows, schema=schemas.TICKS)
-    valid, invalid = validate_split(df, tick_valid_predicate(), cache=False)
+    valid, invalid = validate_split(df, tick_valid_predicate())
     assert sorted(r.tick_id for r in valid.collect()) == [1, 5]
     assert sorted(r.tick_id for r in invalid.collect()) == [2, 3, 4]
 
@@ -41,8 +41,8 @@ def test_candle_predicate_and_any_check(spark):
 
 
 def test_table_profile_exact_and_approx_paths(spark):
-    """The exact profile counts are literal; the HLL path keeps the
-    same schema and lands within the sketch's error envelope."""
+    """The profile's row, null and exact distinct counts and its
+    lexical min/max are literal."""
     from auto_trade_data_pipeline_spark.operators.profile import table_profile
 
     df = spark.createDataFrame(
@@ -54,10 +54,6 @@ def test_table_profile_exact_and_approx_paths(spark):
     assert prof["k"]["n_distinct"] == 2
     assert prof["s"]["min_value"] == "a" and prof["s"]["max_value"] == "b"
     assert prof["v"]["n_distinct"] == 2 and prof["v"]["n_nulls"] == 1
-    approx = {r["column_name"]: r for r in table_profile(df, exact=False).collect()}
-    assert set(approx) == set(prof)
-    for c in prof:
-        assert abs(approx[c]["n_distinct"] - prof[c]["n_distinct"]) <= 1
 
 
 def test_observed_quality_metrics_ride_the_action(spark):
