@@ -1,6 +1,7 @@
 """Anchor corpus (ST5-ST7 batch form): the anchored_vwap_points table
-from the per-symbol state machine, the filled anchored VWAP, and an
-oracle-checked daily key-level companion query.
+from the per-symbol state machine, the anchored VWAP that kernel fills,
+the stand-alone fill over a fixture, and an oracle-checked daily
+key-level companion query.
 
 The state machine itself is inherently sequential (rows-only at the
 driver; pinned by pytest including a DST-boundary day — SURVEY §7
@@ -79,9 +80,9 @@ def anchored_vwap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor = first candle of each (symbol, NY day), snapshot = last
     candle of each minute — i.e. session-anchored VWAP sampled per
     minute. The oracle recomputes each window directly; the operator
-    uses per-symbol prefix sums + two equi joins (one window pass, no
-    range explosion), so this green row certifies the J5-style fill
-    math the stateful table (rows-only) reuses."""
+    cogroups points and candles by symbol and sums each range with the
+    anchor kernel's own range-VWAP helper, so this green row certifies
+    the J5-style fill math the stateful table uses."""
     candles = _candles(spark, sf_dir)
     ny_date = F.to_date(F.from_utc_timestamp("timestamp", "America/New_York"))
     c = candles.withColumn("ny_date", ny_date)
@@ -420,8 +421,9 @@ def anchored_vwap_points_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``src/candle_to_calcs.py:236-247``): per-symbol anchor snapshots
     from the daily/peak state machine with event-time 300 s flushes,
     deduped keep-last per anchor — ORACLED via the anchor-machine
-    flush-window decomposition (rounded price, NULL vwap
-    placeholder)."""
+    flush-window decomposition (rounded price). ``anchored_vwap`` is
+    the reference's NULL placeholder here, as its oracle states; the
+    kernel's filled value is checked by ``anchored_vwap_filled``."""
     p = _points(spark, sf_dir)
     return p.select(
         "symbol",
@@ -432,7 +434,7 @@ def anchored_vwap_points_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("price_at_anchor", 4).alias("price_at_anchor"),
         F.date_format("current_snapshot_timestamp", TS_FMT_SPARK).alias("snapshot_ts"),
         "current_idx",
-        "anchored_vwap",
+        F.lit(None).cast("double").alias("anchored_vwap"),
     )
 
 
@@ -440,8 +442,8 @@ def _filled_oracle() -> str:
     """The points oracle composed with the relational fill: per
     anchor snapshot, VWAP over the candles in
     [anchor_ts, snapshot_ts] — sum(close*volume)/sum(volume),
-    NULL when the range's volume is zero. (The Spark side computes
-    the same windows via per-symbol prefix sums + two equi joins;
+    NULL when the range's volume is zero. (The Spark side sums the
+    same ranges inside the anchor kernel, over its sorted candle rows;
     round-4 absorbs summation-order drift.)"""
     return f"""
 WITH {CANDLES_CTE},
@@ -464,12 +466,11 @@ FROM rng
 @register("anchored_vwap_filled", _filled_oracle(), tags=("ST5", "J5"))
 def anchored_vwap_filled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The anchored VWAP the reference leaves as a NULL placeholder
-    (``:246``), actually computed: per-symbol cumulative prefix sums +
-    two equi joins (no range explosion) — now ORACLED end-to-end by
-    composing the anchor-machine oracle with the relational fill."""
-    candles = _candles(spark, sf_dir)
-    filled = fill_anchored_vwap(anchored_vwap_points(candles, "1s", 300), candles)
-    return filled.select(
+    (``:246``), actually computed: the anchor kernel sums each anchor's
+    range over its symbol's sorted candles as it emits the row —
+    ORACLED end-to-end by composing the anchor-machine oracle with the
+    relational fill."""
+    return _points(spark, sf_dir).select(
         "symbol",
         "anchor_type",
         F.date_format("anchor_timestamp", TS_FMT_SPARK).alias("anchor_ts"),

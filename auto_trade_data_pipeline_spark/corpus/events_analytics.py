@@ -495,9 +495,9 @@ kth AS (
   FROM rk GROUP BY event_type
 )
 SELECT event_type, n_exact, k_used, kth_hv,
-       round(CASE WHEN n_exact <= {KMV_K} THEN CAST(n_exact AS DOUBLE)
+       round(CASE WHEN k_used < {KMV_K} THEN CAST(n_exact AS DOUBLE)
                   ELSE (({KMV_K} - 1.0) * {_KMV_SPACE}) / kth_hv END, 4) AS est_distinct,
-       round(abs(CASE WHEN n_exact <= {KMV_K} THEN CAST(n_exact AS DOUBLE)
+       round(abs(CASE WHEN k_used < {KMV_K} THEN CAST(n_exact AS DOUBLE)
                       ELSE (({KMV_K} - 1.0) * {_KMV_SPACE}) / kth_hv END - n_exact)
              / n_exact, 4) AS rel_error
 FROM kth
@@ -520,6 +520,7 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the shuffle carries at most k longs per group. Groups are few
     (event types); a high-cardinality group key would ride the same
     salted two-stage pattern as operators/skew.py."""
+    from auto_trade_data_pipeline_spark.operators.sketch import kmv_estimate_col
     from auto_trade_data_pipeline_spark.operators.text import hash64
     from pyspark.sql.window import Window
 
@@ -542,10 +543,8 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("kth_hv"),
         F.least(F.lit(KMV_K), F.max("n_distinct")).cast("long").alias("k_used"),
     )
-    est = F.when(
-        F.col("n_exact") <= KMV_K, F.col("n_exact").cast("double")
-    ).otherwise((F.lit(float(KMV_K - 1)) * F.lit(_KMV_SPACE)) / F.col("kth_hv"))
-    return kth.select(
+    est = kmv_estimate_col(KMV_K)
+    return kth.withColumn("sketch_n", F.col("k_used")).select(
         "event_type",
         "n_exact",
         "k_used",

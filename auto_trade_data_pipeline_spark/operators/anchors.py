@@ -29,9 +29,16 @@ Deterministic deviations (documented; SURVEY §7 hard-parts 4-5):
   reference's are buffer-relative);
 - the keep-last dedup gets a deterministic anchor_type tiebreak.
 
+Anchored VWAP: the reference leaves ``anchored_vwap`` as a NULL
+placeholder (``:246``). Here the kernel, which already holds its
+symbol's candles sorted, fills it for every row it emits: the
+volume-weighted close over rows [anchor_idx, current_idx], summed
+directly over that range (``_range_vwap``), NULL when the range's
+volume is 0. Differencing prefix sums would cancel digits.
+
 Scale shape: one applyInPandas pass per symbol (the state is
 inherently sequential per symbol — same constraint as the reference);
-the anchored-VWAP fill is pure window + join work, no Python loop.
+the points table needs one shuffle by symbol and nothing after it.
 """
 
 from __future__ import annotations
@@ -41,7 +48,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from auto_trade_data_pipeline_spark.functions import ta
 
@@ -55,6 +62,20 @@ ANCHOR_SCHEMA = (
     " anchor_timestamp timestamp, anchor_idx long, price_at_anchor double,"
     " current_snapshot_timestamp timestamp, current_idx long, anchored_vwap double"
 )
+ANCHOR_COLS = [
+    "symbol", "timeframe", "anchor_type", "anchor_timestamp", "anchor_idx",
+    "price_at_anchor", "current_snapshot_timestamp", "current_idx", "anchored_vwap",
+]
+
+
+def _range_vwap(pv: np.ndarray, v: np.ndarray, a_idx: int, s_idx: int) -> float | None:
+    """Volume-weighted close over rows ``a_idx..s_idx`` inclusive, from
+    ``pv = close * volume`` and ``v = volume``; None (SQL NULL) when the
+    range's volume is not positive."""
+    vol = v[a_idx : s_idx + 1].sum()
+    if not vol > 0:
+        return None
+    return float(pv[a_idx : s_idx + 1].sum() / vol)
 
 
 def _make_kernel(timeframe: str, flush_secs: int):
@@ -62,13 +83,7 @@ def _make_kernel(timeframe: str, flush_secs: int):
         pdf = pdf.sort_values("timestamp", kind="mergesort").reset_index(drop=True)
         n = len(pdf)
         if n == 0:
-            return pd.DataFrame(
-                columns=[
-                    "symbol", "timeframe", "anchor_type", "anchor_timestamp",
-                    "anchor_idx", "price_at_anchor", "current_snapshot_timestamp",
-                    "current_idx", "anchored_vwap",
-                ]
-            )
+            return pd.DataFrame(columns=ANCHOR_COLS)
         symbol = pdf["symbol"].iloc[0]
         h_arr = pdf["high"].to_numpy(dtype=float)
         l_arr = pdf["low"].to_numpy(dtype=float)
@@ -129,7 +144,7 @@ def _make_kernel(timeframe: str, flush_secs: int):
             for atype, lst in active.items():
                 for a_idx, a_ts, a_price in lst:
                     latest[(atype, a_idx)] = (
-                        symbol, timeframe, atype, a_ts, a_idx, a_price, when, idx, None
+                        symbol, timeframe, atype, a_ts, a_idx, a_price, when, idx
                     )
 
         for i in range(n):
@@ -165,13 +180,11 @@ def _make_kernel(timeframe: str, flush_secs: int):
                 last_flush_ns = ts_ns[i]
 
         snapshot(n - 1, ts_vals[n - 1])
+        v = pdf["volume"].to_numpy(dtype=float)
+        pv = pdf["close"].to_numpy(dtype=float) * v
         return pd.DataFrame(
-            list(latest.values()),
-            columns=[
-                "symbol", "timeframe", "anchor_type", "anchor_timestamp",
-                "anchor_idx", "price_at_anchor", "current_snapshot_timestamp",
-                "current_idx", "anchored_vwap",
-            ],
+            [(*r, _range_vwap(pv, v, r[4], r[7])) for r in latest.values()],
+            columns=ANCHOR_COLS,
         )
 
     return _kernel
@@ -182,7 +195,8 @@ def anchored_vwap_points(
 ) -> DataFrame:
     """Replay the anchor state machine per symbol and emit the
     deduplicated ``anchored_vwap_points_1s`` table, keep-last by
-    snapshot time.
+    snapshot time, with ``anchored_vwap`` filled over each row's
+    [anchor_idx, current_idx] candle range (module docstring).
 
     Documented deviation: the dedup key here is (symbol, timeframe,
     anchor_type, anchor_timestamp). The reference's key omits
@@ -204,44 +218,50 @@ def anchored_vwap_points(
     )
 
 
-def fill_anchored_vwap(points: DataFrame, candles: DataFrame) -> DataFrame:
-    """Fill the reference's NULL ``anchored_vwap`` placeholder
-    (``src/candle_to_calcs.py:246``): volume-weighted average of
-    candle closes over [anchor_timestamp, current_snapshot_timestamp].
+def _row_index(ts: np.ndarray, when: np.ndarray) -> np.ndarray:
+    """Row of each ``when`` in the sorted ``ts``; -1 where it is absent."""
+    i = np.searchsorted(ts, when)
+    hit = i < len(ts)
+    hit[hit] = ts[i[hit]] == when[hit]
+    return np.where(hit, i, -1)
 
-    Shape: per-symbol cumulative sums via one window pass (exact
-    prefix sums), then two broadcast-able equi joins on the candle
-    timestamps — no range explosion, no Python."""
-    w = (
-        Window.partitionBy("symbol")
-        .orderBy("timestamp")
-        .rowsBetween(Window.unboundedPreceding, 0)
+
+def fill_anchored_vwap(points: DataFrame, candles: DataFrame) -> DataFrame:
+    """Fill ``anchored_vwap`` on a points table built outside the anchor
+    kernel (``anchored_vwap_points`` fills its own): the volume-weighted
+    candle close over [anchor_timestamp, current_snapshot_timestamp],
+    NULL when that range's volume is 0 or either timestamp is not a
+    candle of the symbol.
+
+    Shape: one cogroup of points and candles by symbol; each group maps
+    both timestamps to row indices of its sorted candles and sums the
+    range with the kernel's ``_range_vwap``, so the fill is written
+    once."""
+    schema = StructType(
+        [f for f in points.schema if f.name != "anchored_vwap"]
+        + [StructField("anchored_vwap", DoubleType())]
     )
-    cum = candles.select(
-        "symbol",
-        "timestamp",
-        F.sum(F.col("close") * F.col("volume")).over(w).alias("__cpv"),
-        F.sum("volume").over(w).alias("__cv"),
-        (F.col("close") * F.col("volume")).alias("__pv"),
-        F.col("volume").alias("__v"),
+
+    def _fill(pts: pd.DataFrame, bars: pd.DataFrame) -> pd.DataFrame:
+        bars = bars.sort_values("timestamp", kind="mergesort")
+        ts = bars["timestamp"].to_numpy(dtype="datetime64[ns]")
+        v = bars["volume"].to_numpy(dtype=float)
+        pv = bars["close"].to_numpy(dtype=float) * v
+        a = _row_index(ts, pts["anchor_timestamp"].to_numpy(dtype="datetime64[ns]"))
+        s = _row_index(ts, pts["current_snapshot_timestamp"].to_numpy(dtype="datetime64[ns]"))
+        vwap = [
+            _range_vwap(pv, v, ai, si) if ai >= 0 and si >= 0 else None
+            for ai, si in zip(a.tolist(), s.tolist())
+        ]
+        return pts.assign(anchored_vwap=vwap)[schema.fieldNames()]
+
+    # A fresh key column: points derived from ``candles`` share its
+    # ``symbol`` attribute, which makes the cogroup's key ambiguous.
+    bars = candles.select(
+        F.col("symbol").alias("__symbol"), "timestamp", "close", "volume"
     )
-    at_anchor = cum.select(
-        "symbol",
-        F.col("timestamp").alias("anchor_timestamp"),
-        (F.col("__cpv") - F.col("__pv")).alias("__cpv_before"),
-        (F.col("__cv") - F.col("__v")).alias("__cv_before"),
-    )
-    at_snap = cum.select(
-        "symbol",
-        F.col("timestamp").alias("current_snapshot_timestamp"),
-        F.col("__cpv").alias("__cpv_snap"),
-        F.col("__cv").alias("__cv_snap"),
-    )
-    joined = points.drop("anchored_vwap").join(
-        at_anchor, ["symbol", "anchor_timestamp"], "left"
-    ).join(at_snap, ["symbol", "current_snapshot_timestamp"], "left")
-    vol = F.col("__cv_snap") - F.col("__cv_before")
-    vwap = F.when(vol > 0, (F.col("__cpv_snap") - F.col("__cpv_before")) / vol)
-    return joined.withColumn("anchored_vwap", vwap).drop(
-        "__cpv_before", "__cv_before", "__cpv_snap", "__cv_snap"
+    return (
+        points.groupBy("symbol")
+        .cogroup(bars.groupBy("__symbol"))
+        .applyInPandas(_fill, schema=schema)
     )

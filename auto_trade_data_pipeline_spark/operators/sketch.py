@@ -68,11 +68,10 @@ def kmv_estimate_col(k: int) -> Column:
     ``sketch_n`` (retained hashes) and ``kth_hv`` (k-th smallest hash)
     columns: (k-1) * space / kth_hv when the sketch is full, else the
     exact retained count (a sketch with fewer than k hashes IS the
-    distinct set); rounded to 4 places."""
-    est = F.when(F.col("sketch_n") < k, F.col("sketch_n").cast("double")).otherwise(
+    distinct set). Unrounded; callers round what they emit."""
+    return F.when(F.col("sketch_n") < k, F.col("sketch_n").cast("double")).otherwise(
         F.lit(float(k - 1)) * F.lit(KMV_SPACE) / F.col("kth_hv")
     )
-    return F.round(est, 4)
 
 
 def kmv_estimate(sketch: DataFrame, group_col: str, k: int = 64) -> DataFrame:
@@ -82,7 +81,9 @@ def kmv_estimate(sketch: DataFrame, group_col: str, k: int = 64) -> DataFrame:
         F.count(F.lit(1)).alias("sketch_n"),
         F.max(F.when(F.col("r") == k, F.col("hv"))).alias("kth_hv"),
     )
-    return agg.select(group_col, "sketch_n", kmv_estimate_col(k).alias("est_distinct"))
+    return agg.select(
+        group_col, "sketch_n", F.round(kmv_estimate_col(k), 4).alias("est_distinct")
+    )
 
 
 def kmv_pair_overlap(sketch: DataFrame, group_col: str, k: int = 64) -> DataFrame:

@@ -16,8 +16,8 @@ restartable-stage property.
       └─ valid ─ aggregate_candles ─ candles_1s (A1-A3), materialized once
                    ├─ enrich: local cols + sessions + kernel +
                    │  bollinger + volume spike  →  candles_calculated
-                   ├─ anchored_vwap_points ─ fill_anchored_vwap
-                   │  (both read the one candle relation)
+                   ├─ anchored_vwap_points: anchors + their filled
+                   │  VWAP from one per-symbol kernel pass
                    └─ output_dir checkpoints
 
 Reference lifecycle being replaced:
@@ -33,10 +33,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from auto_trade_data_pipeline_spark import sinks
-from auto_trade_data_pipeline_spark.operators.anchors import (
-    anchored_vwap_points,
-    fill_anchored_vwap,
-)
+from auto_trade_data_pipeline_spark.operators.anchors import anchored_vwap_points
+# Unused here; perfbench's traced run looks up each of its span names on this module.
+from auto_trade_data_pipeline_spark.operators.anchors import fill_anchored_vwap  # noqa: F401
 from auto_trade_data_pipeline_spark.operators.candles import aggregate_candles
 from auto_trade_data_pipeline_spark.operators.indicators import enrich_indicators
 from auto_trade_data_pipeline_spark.operators.validation import (
@@ -76,7 +75,7 @@ def run_batch_pipeline(
 
     ``result.candles`` is a lazy local checkpoint: the first action
     that reads it computes the candles once and keeps their blocks, and
-    ``calculated``, ``anchors`` (both of its stages) and the checkpoint
+    ``calculated``, ``anchors`` and the checkpoint
     writes read those blocks instead of re-running scan, validation and
     aggregation. Its plan no longer refers to the tick source, so the
     cache manager never matches it against a later run over the same
@@ -95,9 +94,7 @@ def run_batch_pipeline(
     calculated = with_bollinger(calculated)
     calculated = with_volume_spike(calculated)
     calculated = enrich_indicators(calculated)
-    anchors = fill_anchored_vwap(
-        anchored_vwap_points(candles, f"{timeframe_seconds}s", flush_secs), candles
-    )
+    anchors = anchored_vwap_points(candles, f"{timeframe_seconds}s", flush_secs)
     if output_dir is not None:
         sinks.write_append(invalid, f"{output_dir}/invalid_ticks")
         for name, df in (

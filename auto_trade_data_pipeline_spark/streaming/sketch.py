@@ -106,8 +106,8 @@ def streaming_kmv_sketch(values: DataFrame, group_col: str, k: int = 64) -> Data
 
 def kmv_estimate_cols(df: DataFrame, k: int) -> DataFrame:
     """Attach the KMV estimate (`operators.sketch.kmv_estimate_col`) to
-    sketch-summary rows as ``est_distinct``."""
-    return df.withColumn("est_distinct", kmv_estimate_col(k))
+    sketch-summary rows as ``est_distinct``, rounded to 4 places."""
+    return df.withColumn("est_distinct", F.round(kmv_estimate_col(k), 4))
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,6 @@
 """Anchor state machine — daily triggers, replacement, flush, dedup,
-anchored-VWAP fill, and the DST boundary (SURVEY §7 hard-part 4)."""
+the anchored VWAP (filled by the kernel and by the cogroup fill), and
+the DST boundary (SURVEY §7 hard-part 4)."""
 
 from __future__ import annotations
 
@@ -90,28 +91,55 @@ def test_event_time_flush_clears_anchors(spark):
     assert highs[0]["current_snapshot_timestamp"] == base + timedelta(seconds=301)
 
 
-def test_fill_anchored_vwap_matches_hand_calc(spark):
-    # Bar 0 sits exactly at 09:30 NY (14:30 UTC) -> daily_930 anchor
-    # at bar 0, alive through the single final snapshot at bar 3.
-    base = datetime(2024, 1, 2, 14, 30, 0)
+# Bar 0 sits exactly at 09:30 NY (14:30 UTC) -> daily_930 anchor at bar
+# 0, alive through the single final snapshot at bar 3: the VWAP over
+# closes 10..13 with volumes 100..400.
+_VWAP_BASE = datetime(2024, 1, 2, 14, 30, 0)
+_VWAP_CLOSES = [10.0, 11.0, 12.0, 13.0]
+_VWAP_VOLS = [100.0, 200.0, 300.0, 400.0]
+_VWAP_EXPECT = sum(c * v for c, v in zip(_VWAP_CLOSES, _VWAP_VOLS)) / sum(_VWAP_VOLS)
+
+
+def _vwap_candles(spark, vols=_VWAP_VOLS, symbol="S"):
     rows = [
-        _bar("S", base + timedelta(seconds=i), 10, 10 + i, 9, 10.0 + i, v=100 * (i + 1))
-        for i in range(4)
+        _bar(symbol, _VWAP_BASE + timedelta(seconds=i), 10, c, 9, c, v=v)
+        for i, (c, v) in enumerate(zip(_VWAP_CLOSES, vols))
     ]
-    candles = spark.createDataFrame(rows, CANDLE_SCHEMA)
+    return spark.createDataFrame(rows, CANDLE_SCHEMA)
+
+
+def _vwap_930(rows):
+    [row] = [r for r in rows if r["anchor_type"] == "daily_930" and r["current_idx"] == 3]
+    return row["anchored_vwap"]
+
+
+def test_points_carry_anchored_vwap(spark):
+    """The anchor kernel fills ``anchored_vwap`` itself."""
+    pts = anchored_vwap_points(_vwap_candles(spark), flush_secs=10**9).collect()
+    assert abs(_vwap_930(pts) - _VWAP_EXPECT) < 1e-9
+
+
+def test_fill_anchored_vwap_matches_hand_calc(spark):
+    """The cogroup fill over a points table with the VWAP blanked; a
+    symbol with candles and no points adds no rows."""
+    candles = _vwap_candles(spark).unionByName(_vwap_candles(spark, symbol="T").limit(1))
+    pts = anchored_vwap_points(candles, flush_secs=10**9).filter(F.col("symbol") == "S")
+    blank = pts.withColumn("anchored_vwap", F.lit(None).cast("double"))
+    filled = fill_anchored_vwap(blank, candles).collect()
+    assert len(filled) == pts.count()
+    assert abs(_vwap_930(filled) - _VWAP_EXPECT) < 1e-9
+
+
+def test_zero_volume_range_gives_null_vwap(spark):
+    """A range with no volume has no VWAP: SQL NULL from the kernel and
+    from the fill, never NaN."""
+    candles = _vwap_candles(spark, vols=[0.0] * 4)
     pts = anchored_vwap_points(candles, flush_secs=10**9)
     filled = fill_anchored_vwap(pts, candles)
-    row = [
-        r
-        for r in filled.collect()
-        if r["anchor_type"] == "daily_930" and r["current_idx"] == 3
-    ][0]
-    # Anchor at bar 0; snapshot at bar 3: vwap over closes 10..13 with
-    # volumes 100..400.
-    closes = [10.0, 11.0, 12.0, 13.0]
-    vols = [100.0, 200.0, 300.0, 400.0]
-    expect = sum(c * v for c, v in zip(closes, vols)) / sum(vols)
-    assert abs(row["anchored_vwap"] - expect) < 1e-9
+    for df in (pts, filled):
+        assert df.count() > 0
+        assert df.filter(F.col("anchored_vwap").isNotNull()).count() == 0
+        assert _vwap_930(df.collect()) is None
 
 
 def test_dedup_keeps_latest_snapshot(spark):

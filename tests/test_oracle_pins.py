@@ -1,12 +1,15 @@
-"""Hash-exact oracle pins for the window families and BPE training.
+"""Hash-exact oracle pins for the window families, BPE training, the
+anchor table with its anchored VWAP, and the KMV distinct-count sketch.
 
 Each query runs on Spark and on its DuckDB oracle at sf0.001 and must
 agree on column names, row count, render classes (no pandas dtype
 drift) and the order-insensitive value hash — the same comparison
 ``tools/verify_local.py`` makes, without its sweep-manifest write.
 Together they pin the values of every window-family builder
-(``operators/windows.py``, plain and block-parallel) and the BPE pair
-stream against references written independently of them.
+(``operators/windows.py``, plain and block-parallel), the BPE pair
+stream, the anchor kernel's points and filled VWAP, the stand-alone
+VWAP fill and the KMV estimate against references written
+independently of them.
 """
 
 from __future__ import annotations
@@ -29,7 +32,16 @@ def duck(sf_small):
 
 @pytest.mark.parametrize(
     "name",
-    ["session_flags", "rolling_window_features", "full_enrichment", "bpe_train_merges"],
+    [
+        "session_flags",
+        "rolling_window_features",
+        "full_enrichment",
+        "bpe_train_merges",
+        "anchored_vwap_points",
+        "anchored_vwap_filled",
+        "anchored_vwap_fill",
+        "kmv_distinct_sketch",
+    ],
 )
 def test_query_matches_duckdb_oracle(spark, sf_small, duck, name):
     q = load_all()[name]

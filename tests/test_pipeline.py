@@ -4,6 +4,8 @@ every derived output reads."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -49,11 +51,10 @@ def test_batch_pipeline_end_to_end(spark, sf_small, tmp_path):
 def test_candles_materialized_once_and_shared(spark, sf_small):
     """Every candle consumer reads one materialized candle relation:
     the executed plans of ``candles``, ``calculated`` and ``anchors``
-    (the points kernel and the VWAP fill both read candles) scan no
-    events file and read one checkpointed candle RDD, computed by the
-    first of them to run. Without it every candle read re-runs scan ->
-    validate -> aggregate: five events scans (one each in candles and
-    calculated, three in anchors)."""
+    scan no events file and read one checkpointed candle RDD, computed
+    by the first of them to run. Without it every candle read re-runs
+    scan -> validate -> aggregate: one events scan in each of the three
+    outputs."""
     r = run_batch_pipeline(ticks_from_events(spark, sf_small))
     _run(r)
     plans = [
@@ -97,3 +98,19 @@ def test_rerun_reads_changed_input(spark, sf_small, tmp_path):
     assert r.invalid_ticks.count() + trades == kept.num_rows
     for df in (r.candles, r.calculated, r.anchors):
         assert {row.symbol for row in df.select("symbol").distinct().collect()} == {symbol}
+
+
+def test_anchors_plan_is_one_shuffle_and_the_kernel(spark, sf_small):
+    """The anchors output is the per-symbol kernel alone: it fills the
+    anchored VWAP itself, so the executed plan has one shuffle (by
+    symbol) into one grouped-map Python node, and no window or
+    broadcast join after it."""
+    r = run_batch_pipeline(ticks_from_events(spark, sf_small))
+    r.anchors.write.mode("overwrite").format("noop").save()
+    nodes = Counter(
+        n.getClass().getSimpleName() for n in _walk(r.anchors._jdf.queryExecution().executedPlan())
+    )
+    assert nodes["ShuffleExchangeExec"] == 1
+    assert nodes["BroadcastExchangeExec"] == 0
+    assert nodes["WindowExec"] == 0
+    assert nodes["FlatMapGroupsInPandasExec"] == 1

@@ -285,3 +285,46 @@ def test_streaming_cms_restart_carries_state(spark, tmp_path):
         (r.r, r.bucket): r.c for r in cms_sketch(both, "tok", depth=3, width=64).collect()
     }
     assert streamed == batch
+
+
+def test_kmv_distinct_sketch_agrees_with_kmv_estimate_at_k(spark, tmp_path):
+    """At 63, 64 and 65 distinct users the corpus query's estimate is
+    ``kmv_estimate``'s (exact only below k = 64 retained hashes) and
+    hash-equal to its DuckDB oracle."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from auto_trade_data_pipeline_spark.corpus.events_analytics import (
+        _KMV_ORACLE,
+        kmv_distinct_sketch,
+    )
+    from tools.verify_local import table_hash
+
+    groups = {"g63": 63, "g64": 64, "g65": 65}
+    rows = [(g, u) for g, n in groups.items() for u in range(n)]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(rows)), pa.int64()),
+            "ts": pa.array([0] * len(rows), pa.timestamp("us")),
+            "user_id": pa.array([u for _, u in rows], pa.int64()),
+            "event_type": [g for g, _ in rows],
+            "value": pa.array([1.0] * len(rows)),
+            "props": ["{}"] * len(rows),
+        }),
+        tmp_path / "events.parquet",
+    )
+    got = kmv_distinct_sketch(spark, str(tmp_path))
+    by_group = {r.event_type: r for r in got.collect()}
+    assert {g: r.k_used for g, r in by_group.items()} == {"g63": 63, "g64": 64, "g65": 64}
+    assert by_group["g63"].est_distinct == 63.0
+    est = kmv_estimate(kmv_sketch(_events(spark, rows), "event_type", "user_id"), "event_type")
+    assert {g: r.est_distinct for g, r in by_group.items()} == {
+        r.event_type: r.est_distinct for r in est.collect()
+    }
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    oracle = con.sql(_KMV_ORACLE)
+    srows = [tuple(r) for r in got.collect()]
+    assert table_hash(srows, got.columns) == table_hash(oracle.fetchall(), oracle.columns)
