@@ -5,6 +5,7 @@ capabilities of the reference trade-data pipeline
 Layout
 ------
 - ``session``    : tuned SparkSession factory
+- ``pyworker``   : the sessions' Python worker daemon
 - ``schemas``    : explicit StructType registry for every logical table
 - ``sources``    : batch/stream sources + sinks (REST-paginated source
                    adapter, schema-asserting scans, upsert/append sinks)

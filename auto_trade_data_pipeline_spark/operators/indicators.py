@@ -110,7 +110,9 @@ def _indicator_kernel(
     c = pdf["close"].to_numpy(dtype=float)
     o = pdf["open"].to_numpy(dtype=float)
 
-    out = pdf
+    # Columns are gathered here and attached with one concat: inserting
+    # them one by one (86 inserts) took half the kernel's CPU time.
+    out: dict[str, np.ndarray] = {}
     if "pack" in families:
         out["typical_price"] = (h + l + c) / 3.0
 
@@ -198,7 +200,7 @@ def _indicator_kernel(
             vl[vi] = 1
             out[f"is_{prefix}_peak"] = pk
             out[f"is_{prefix}_valley"] = vl
-    return out
+    return pd.concat([pdf, pd.DataFrame(out, index=pdf.index)], axis=1)
 
 
 def enrich_indicators(

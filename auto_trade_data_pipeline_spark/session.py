@@ -11,6 +11,13 @@ At 100 TB the same settings hold conceptually: AQE handles the
 shuffle-partition sizing dynamically, `spark.sql.files.maxPartitionBytes`
 keeps scan tasks bounded, and broadcast threshold lets dimension
 tables (region/nation/suppliers/symbol lists) skip the shuffle.
+
+Python workers fork from the engine's own daemon
+(:mod:`auto_trade_data_pipeline_spark.pyworker`), which keeps the
+directory indexes of Spark's installation archives across tasks
+instead of re-reading them at the start of every Python task. The
+package's parent directory goes on the workers' ``PYTHONPATH``, so
+the daemon imports wherever the driver runs.
 """
 
 from __future__ import annotations
@@ -18,6 +25,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Directory that holds the package: Python workers import the daemon
+#: and the kernels from it.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _driver_mem() -> str:
@@ -81,8 +92,12 @@ def get_spark(
         # before execution from observed sizes) and skew-join
         # splitting; per-query MERGE hints remain the escape hatch.
         .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.python.daemon.module", "auto_trade_data_pipeline_spark.pyworker")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    pythonpath = "spark.executorEnv.PYTHONPATH"
+    conf[pythonpath] = os.pathsep.join(p for p in (_PACKAGE_PARENT, conf.get(pythonpath)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
