@@ -24,6 +24,7 @@ from auto_trade_data_pipeline_spark.corpus import register, scoped_persist
 from auto_trade_data_pipeline_spark.corpus.ext import _DOCS_CTE, _duck_hash
 from auto_trade_data_pipeline_spark.operators import clean as CL
 from auto_trade_data_pipeline_spark.operators import text as TX
+from auto_trade_data_pipeline_spark.operators.scans import greedy_pack, scan_by_key
 from auto_trade_data_pipeline_spark.sources import fan_out_scan, load_table
 
 # ---------------------------------------------------------------------------
@@ -1367,6 +1368,9 @@ def boilerplate_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the synthetic 30-100-token documents pack several per bin.
 PACK_CAPACITY = 256
 
+#: The packing scan for ``scan_by_key``: each document's bin id.
+_PACK_SCAN = ("bigint", lambda pdf: greedy_pack(pdf["n_tokens"], PACK_CAPACITY)[0])
+
 _PACKING_ORACLE = f"""
 WITH {_DOCS_CTE},
 tc AS (
@@ -1399,39 +1403,23 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     straddle sequence boundaries — pure window math): keeping docs
     intact makes the fill level genuinely recursive, so this one is a
     scan. The recursion (a bin absorbs a doc while fill stays <=
-    capacity, else a new bin opens) runs as a pure-JVM aggregate()
-    scan fold (operators/jvm_folds.py:packing_scan_sql);
-    the DuckDB oracle replays it per row as a prefix list_reduce with
-    a LIST accumulator ([bin, fill] — ORACLES.md's coupled-recursion
-    rule). Integer-exact on both sides, so the parity is bit-free of
-    FP concerns.
+    capacity, else a new bin opens) is operators/scans.py:greedy_pack,
+    run per source by scan_by_key; the DuckDB oracle replays it per
+    row as a prefix list_reduce with a LIST accumulator ([bin, fill] —
+    ORACLES.md's coupled-recursion rule). Integer-exact on both sides,
+    so the parity is bit-free of FP concerns.
 
-    Scale shape: one collect_list per source — per-source serial by
+    Scale shape: one pass per source — per-source serial by
     definition (packing order is the spec). At 100 TB you pack per
-    (source, shard) with shard-local bin ids exactly like this fold,
+    (source, shard) with shard-local bin ids exactly like this scan,
     then offset bin ids by a per-shard prefix sum (the
     global_rank_orders recipe) if globally unique ids are needed."""
-    from auto_trade_data_pipeline_spark.operators import jvm_folds as jf
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "source",
-        "doc_id",
-        F.size(TX.tokens(F.col("text"))).cast("double").alias("n_toks"),
+        "source", "doc_id", F.size(TX.tokens(F.col("text"))).cast("long").alias("n_tokens")
     )
-    out = jf.scan_by_key(
-        toks,
-        ["source"],
-        "doc_id",
-        ["n_toks"],
-        {"bin_id": jf.packing_scan_sql("transform(s, e -> e.n_toks)", PACK_CAPACITY)},
-    )
-    return out.select(
-        "source",
-        "doc_id",
-        F.col("n_toks").cast("long").alias("n_tokens"),
-        "bin_id",
-    )
+    out = scan_by_key(toks, ["source"], "doc_id", ["n_tokens"], {"bin_id": _PACK_SCAN})
+    return out.select("source", "doc_id", "n_tokens", "bin_id")
 
 
 #: Shards per source for the sharded packing query — the 100 TB form.
@@ -1493,22 +1481,16 @@ def sequence_packing_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One packing exchange by (source, shard) + one dimension-sized
     window + one broadcast join: the corpus-sized side shuffles once,
-    exactly like the unsharded fold."""
-    from auto_trade_data_pipeline_spark.operators import jvm_folds as jf
-
+    exactly like the unsharded scan."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
         (F.col("doc_id") % PACK_SHARDS).alias("shard"),
         "doc_id",
-        F.size(TX.tokens(F.col("text"))).cast("double").alias("n_toks"),
+        F.size(TX.tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
-    local = jf.scan_by_key(
-        toks,
-        ["source", "shard"],
-        "doc_id",
-        ["n_toks"],
-        {"bin_local": jf.packing_scan_sql("transform(s, e -> e.n_toks)", PACK_CAPACITY)},
+    local = scan_by_key(
+        toks, ["source", "shard"], "doc_id", ["n_tokens"], {"bin_local": _PACK_SCAN}
     )
     nb = local.groupBy("source", "shard").agg(F.max("bin_local").alias("n_bins"))
     w = (
@@ -1526,7 +1508,7 @@ def sequence_packing_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.col("shard").cast("long").alias("shard"),
             "doc_id",
-            F.col("n_toks").cast("long").alias("n_tokens"),
+            "n_tokens",
             "bin_local",
             (F.col("bin_local") + F.col("bin_offset")).alias("bin_global"),
         )
@@ -1556,7 +1538,7 @@ def packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     capacity, each occupying a bin alone — the padding-waste signal
     that says "split or drop these upstream").
 
-    Scale shape: inherits the packing fold's one hash exchange, then
+    Scale shape: inherits the packing scan's one hash exchange, then
     one sources-sized map-side-combinable agg — the report adds no
     corpus-sized shuffle of its own."""
     packed = sequence_packing(spark, sf_dir)

@@ -32,7 +32,7 @@ from auto_trade_data_pipeline_spark.operators.windows import (
     with_volume_spike,
 )
 from auto_trade_data_pipeline_spark.schemas import SchemaMismatchError
-from auto_trade_data_pipeline_spark.sources import N_TICK_SYMBOLS, ticks_from_events
+from auto_trade_data_pipeline_spark.sources import ticks_from_events
 
 
 def _cdl_full_oracle() -> str:
@@ -414,33 +414,22 @@ def ema_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     not just golden-pinned. 4-decimal rounding absorbs the only
     engine difference left (compiler FMA fusion in the last bits).
 
-    Spark side: shape-routed (operators/jvm_folds.py:scan_by_key —
-    round 6): the pure-JVM aggregate() scan fold below the measured
-    rows-per-key crossover, the bit-identical ta.ema numpy kernel
-    above it (tests/test_jvm_folds.py pins exact parity both ways)."""
+    Spark side: the ta.ema numpy kernel per symbol
+    (operators/scans.py:scan_by_key)."""
     from auto_trade_data_pipeline_spark.functions import ta
-    from auto_trade_data_pipeline_spark.operators import jvm_folds as jf
+    from auto_trade_data_pipeline_spark.operators.scans import scan_by_key
 
     candles = aggregate_candles(ticks_from_events(spark, sf_dir), 1)
-    closes = "transform(s, e -> e.close)"
 
     def _ema_np(p):
         return lambda pdf: ta.ema(pdf["close"].to_numpy(dtype=float), p)
 
-    out = jf.scan_by_key(
+    out = scan_by_key(
         candles.select("symbol", "timestamp", "close"),
         ["symbol"],
         "timestamp",
         ["close"],
-        {
-            "ema12": jf.ema_scan_sql(closes, 12),
-            "ema26": jf.ema_scan_sql(closes, 26),
-        },
-        numpy_scans={
-            "ema12": ("double", _ema_np(12)),
-            "ema26": ("double", _ema_np(26)),
-        },
-        rows_per_key=jf.rows_per_key_estimate(sf_dir, "events", N_TICK_SYMBOLS),
+        {"ema12": ("double", _ema_np(12)), "ema26": ("double", _ema_np(26))},
     )
     return out.select(
         "symbol",
@@ -601,22 +590,12 @@ def atr_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     index 14) and Wilder recursion ``(prev*13 + tr)/14`` replayed as
     a per-row prefix list_reduce — cross-engine verification of the
     W5 smoothing machinery (the ADX/DI family shares it). Spark side:
-    shape-routed (operators/jvm_folds.py:scan_by_key, round 6) —
-    pure-JVM aggregate() scan fold below the rows-per-key crossover,
-    the bit-identical ta.atr numpy kernel above it. True range is a
-    zip_with over the one-element-shifted bar array — identical to
-    the kernel's lag semantics."""
+    the ta.atr numpy kernel per symbol (operators/scans.py:scan_by_key);
+    its true range reads the previous bar's close."""
     from auto_trade_data_pipeline_spark.functions import ta
-    from auto_trade_data_pipeline_spark.operators import jvm_folds as jf
+    from auto_trade_data_pipeline_spark.operators.scans import scan_by_key
 
     candles = aggregate_candles(ticks_from_events(spark, sf_dir), 1)
-    tr_arr = (
-        "zip_with(s, array_insert(slice(s, 1, size(s) - 1), 1, s[0]),"
-        " (cur, prv) -> CASE WHEN cur.timestamp = prv.timestamp"
-        " THEN cur.high - cur.low"
-        " ELSE greatest(cur.high - cur.low, abs(cur.high - prv.close),"
-        " abs(cur.low - prv.close)) END)"
-    )
 
     def _atr_np(pdf):
         return ta.atr(
@@ -626,14 +605,12 @@ def atr_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
             _ATR_N,
         )
 
-    out = jf.scan_by_key(
+    out = scan_by_key(
         candles.select("symbol", "timestamp", "high", "low", "close"),
         ["symbol"],
         "timestamp",
         ["high", "low", "close"],
-        {"atr": jf.wilder_atr_scan_sql(tr_arr, _ATR_N)},
-        numpy_scans={"atr": ("double", _atr_np)},
-        rows_per_key=jf.rows_per_key_estimate(sf_dir, "events", N_TICK_SYMBOLS),
+        {"atr": ("double", _atr_np)},
     )
     return out.select(
         "symbol",

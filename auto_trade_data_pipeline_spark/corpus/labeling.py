@@ -27,7 +27,7 @@ from auto_trade_data_pipeline_spark.operators.bars import (
     triple_barrier_labels,
 )
 from auto_trade_data_pipeline_spark.operators.candles import aggregate_candles
-from auto_trade_data_pipeline_spark.sources import N_TICK_SYMBOLS, ticks_from_events
+from auto_trade_data_pipeline_spark.sources import ticks_from_events
 
 
 def _fmt(col):
@@ -273,14 +273,10 @@ def heikin_ashi_candles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-to-right fold as a per-row prefix list_reduce, the same
     differential pattern as the EMA/PSAR oracles. Outputs
     integer-scaled e4 (explicit multiply on both sides)."""
-    from auto_trade_data_pipeline_spark.operators import jvm_folds as jf
     from auto_trade_data_pipeline_spark.operators.candles import heikin_ashi_candles
 
     ticks = ticks_from_events(spark, sf_dir)
-    c1m = aggregate_candles(ticks, 60)
-    ha = heikin_ashi_candles(
-        c1m, rows_per_key=jf.rows_per_key_estimate(sf_dir, "events", N_TICK_SYMBOLS)
-    )
+    ha = heikin_ashi_candles(aggregate_candles(ticks, 60))
     return ha.select(
         "symbol",
         _fmt("timestamp").alias("bucket_ts"),
@@ -2406,16 +2402,12 @@ def kalman_price_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     state machine (after EMA, PSAR, and the anchor machine): the
     DuckDB oracle replays the gain/level/variance recursion per row
     as a STRUCT-accumulator prefix list_reduce, bit-for-bit in IEEE
-    doubles (functions/ta.py:kalman_filter). Spark side is
-    shape-routed (operators/jvm_folds.py:scan_by_key, round 6 — the
-    round-5 fold-everywhere routing regressed this query 2.3x at
-    sf0.1): pure-JVM aggregate() scan fold below the rows-per-key
-    crossover, the bit-identical ta.kalman_filter numpy kernel above
-    it (parity pinned in tests/test_jvm_folds.py); e4 integer scaling
-    absorbs the last-bit FMA-fusion difference (the EMA oracle
-    convention)."""
+    doubles (functions/ta.py:kalman_filter). Spark side: the
+    ta.kalman_filter numpy kernel per symbol
+    (operators/scans.py:scan_by_key); e4 integer scaling absorbs the
+    last-bit FMA-fusion difference (the EMA oracle convention)."""
     from auto_trade_data_pipeline_spark.functions import ta
-    from auto_trade_data_pipeline_spark.operators import jvm_folds as jf
+    from auto_trade_data_pipeline_spark.operators.scans import scan_by_key
 
     ticks = ticks_from_events(spark, sf_dir)
     mclose = aggregate_candles(ticks, 60).select("symbol", "timestamp", "close")
@@ -2423,15 +2415,7 @@ def kalman_price_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _kal_np(pdf):
         return ta.kalman_filter(pdf["close"].to_numpy(dtype=float), _KAL_Q, _KAL_R)
 
-    out = jf.scan_by_key(
-        mclose,
-        ["symbol"],
-        "timestamp",
-        ["close"],
-        {"kx": jf.kalman_scan_sql("transform(s, e -> e.close)", _KAL_Q, _KAL_R)},
-        numpy_scans={"kx": ("double", _kal_np)},
-        rows_per_key=jf.rows_per_key_estimate(sf_dir, "events", N_TICK_SYMBOLS),
-    )
+    out = scan_by_key(mclose, ["symbol"], "timestamp", ["close"], {"kx": ("double", _kal_np)})
     return out.select(
         "symbol",
         _fmt("timestamp").alias("bucket_ts"),
@@ -3437,15 +3421,11 @@ def holt_winters_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the COUPLED two-variable recursion per row as a
     struct-accumulator prefix list_reduce, bit-for-bit in IEEE
     doubles (functions/ta.py:holt_winters); e4/e6 integer snaps
-    absorb last-bit FMA fusion. Spark side is shape-routed
-    (operators/jvm_folds.py:scan_by_key, round 6): the pure-JVM
-    aggregate() scan fold below the rows-per-key crossover (Catalyst
-    evaluates named_struct fields against the OLD accumulator, so
-    the coupled recursion is safe as a struct fold on this side —
-    the DuckDB in-place trap is oracle-only), the bit-identical
-    ta.holt_linear numpy kernel above it."""
+    absorb last-bit FMA fusion. Spark side: the ta.holt_linear numpy
+    kernel per symbol (operators/scans.py:scan_by_key), one
+    ``struct<l, b>`` per row."""
     from auto_trade_data_pipeline_spark.functions import ta
-    from auto_trade_data_pipeline_spark.operators import jvm_folds as jf
+    from auto_trade_data_pipeline_spark.operators.scans import scan_by_key
 
     ticks = ticks_from_events(spark, sf_dir)
     mclose = aggregate_candles(ticks, 60).select("symbol", "timestamp", "close")
@@ -3456,14 +3436,12 @@ def holt_winters_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return [{"l": float(li), "b": float(bi)} for li, bi in zip(lev, tr)]
 
-    out = jf.scan_by_key(
+    out = scan_by_key(
         mclose,
         ["symbol"],
         "timestamp",
         ["close"],
-        {"hw": jf.holt_scan_sql("transform(s, e -> e.close)", _HW_ALPHA, _HW_BETA)},
-        numpy_scans={"hw": ("struct<l: double, b: double>", _hw_np)},
-        rows_per_key=jf.rows_per_key_estimate(sf_dir, "events", N_TICK_SYMBOLS),
+        {"hw": ("struct<l: double, b: double>", _hw_np)},
     )
     return out.select(
         "symbol",

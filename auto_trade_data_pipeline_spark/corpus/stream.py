@@ -1310,7 +1310,8 @@ def _stream_packing_oracle() -> str:
 @register("streaming_packing_replay", _stream_packing_oracle(), tags=("ST4", "EXT3"))
 def streaming_packing_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-window prep as a STREAM (streaming/packing.py): the
-    doc-atomic greedy packing fold of ``sequence_packing`` carried as
+    doc-atomic greedy packing of ``sequence_packing`` (the same
+    ``operators/scans.py:greedy_pack``) carried as
     O(1) keyed state per source (open bin id + fill) — the shape of a
     continuous pretraining-ingest pipeline, where documents pack into
     fixed-capacity windows as they arrive rather than in a nightly

@@ -250,30 +250,23 @@ def interpolate_candles(candles: DataFrame, seconds: int = 60) -> DataFrame:
     )
 
 
-def heikin_ashi_candles(
-    candles: DataFrame, rows_per_key: int | None = None
-) -> DataFrame:
+def heikin_ashi_candles(candles: DataFrame) -> DataFrame:
     """Heikin-Ashi smoothed candles per symbol (functions.ta.heikin_ashi).
 
     The ha_open recursion is inherently per-symbol sequential (the
-    same constraint as every recursive indicator — SURVEY §2 W-family).
-    Shape-routed since round 6 (operators/jvm_folds.py:scan_by_key):
-    the pure-JVM aggregate() scan fold below the rows-per-key
-    crossover, the bit-identical functions.ta.heikin_ashi numpy
-    kernel above it (parity pinned in tests/test_jvm_folds.py);
-    callers pass a ``rows_per_key`` estimate (e.g.
-    jvm_folds.rows_per_key_estimate) to enable the routing. All
-    other HA columns are pointwise JVM expressions. Parallelism is
-    symbol-keyed; for a pathological single-symbol history the
-    bounded-tail chunked evaluator recipe of
-    `operators.indicators.enrich_indicators` applies unchanged (the
-    recursion contracts by 1/2 per step, far faster than EMA's
-    2/(n+1)).
+    same constraint as every recursive indicator — SURVEY §2 W-family)
+    and runs as the functions.ta.heikin_ashi numpy kernel per symbol
+    (operators/scans.py:scan_by_key). All other HA columns are
+    pointwise JVM expressions. Parallelism is symbol-keyed; for a
+    pathological single-symbol history the bounded-tail chunked
+    evaluator recipe of `operators.indicators.enrich_indicators`
+    applies unchanged (the recursion contracts by 1/2 per step, far
+    faster than EMA's 2/(n+1)).
     """
     from pyspark.sql import functions as F
 
     from auto_trade_data_pipeline_spark.functions import ta
-    from auto_trade_data_pipeline_spark.operators import jvm_folds as jf
+    from auto_trade_data_pipeline_spark.operators.scans import scan_by_key
 
     def _ha_open_np(pdf):
         return ta.heikin_ashi(
@@ -286,18 +279,12 @@ def heikin_ashi_candles(
     with_hc = candles.select(
         "symbol", "timestamp", "open", "high", "low", "close"
     ).withColumn("hc", F.expr("(open + high + low + close) / 4.0"))
-    out = jf.scan_by_key(
+    out = scan_by_key(
         with_hc,
         ["symbol"],
         "timestamp",
         ["open", "high", "low", "close", "hc"],
-        {
-            "ha_open": jf.ha_open_scan_sql(
-                "transform(s, e -> named_struct('o', e.open, 'c', e.close, 'hc', e.hc))"
-            )
-        },
-        numpy_scans={"ha_open": ("double", _ha_open_np)},
-        rows_per_key=rows_per_key,
+        {"ha_open": ("double", _ha_open_np)},
     )
     return out.select(
         "symbol",

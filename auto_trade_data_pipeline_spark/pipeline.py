@@ -11,7 +11,7 @@ once, not once per output. Stage boundaries can still be checkpointed
 to parquet (pass ``output_dir``) to keep the reference's
 restartable-stage property.
 
-    ticks (any source: rest.fetch_trades, files.read_ticks, events)
+    ticks (any source: format("trade_rest"), files.read_ticks, events)
       └─ validate_split ──────────── invalid side-output (S9)
       └─ valid ─ aggregate_candles ─ candles_1s (A1-A3), materialized once
                    ├─ enrich: local cols + sessions + kernel +

@@ -1,9 +1,8 @@
-"""Sources & sinks: schema-asserting scans, append/upsert sinks, the
-REST-paginated batch source adapter, and the Spark 4 Python
-DataSource form of the same API (`format("trade_rest")`)."""
+"""Sources: schema-asserting scans and the REST-paginated tick API as a
+Spark 4 Python DataSource (`format("trade_rest")`, batch and
+streaming)."""
 
 from auto_trade_data_pipeline_spark.sources.files import (
-    N_TICK_SYMBOLS,
     fan_out_scan,
     load_table,
     read_candles,
@@ -13,7 +12,6 @@ from auto_trade_data_pipeline_spark.sources.files import (
 from auto_trade_data_pipeline_spark.sources.pyds import TickRestDataSource
 
 __all__ = [
-    "N_TICK_SYMBOLS",
     "fan_out_scan",
     "load_table",
     "read_ticks",

@@ -73,13 +73,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return schemas.assert_schema(df, expected, table=name)
 
 
-#: Distinct ``event_type`` values in the driver's events table at
-#: every sf (signup/error/click/view/purchase) — the symbol
-#: cardinality of the tick tape, used as the key-cardinality hint for
-#: the recursive-scan shape routing (operators/jvm_folds.py).
-N_TICK_SYMBOLS = 5
-
-
 #: Node classes that plan a shuffle: optimized logical operators
 #: (Deduplicate, Intersect and Except are rewritten into these by
 #: then), plus the exchanges of a cached relation's physical plan.

@@ -1,10 +1,11 @@
 """Spark 4 Python DataSource for the paginated REST tick API (S1-S3).
 
-The mapInPandas fetch (`sources/rest.py:fetch_trades`) expresses
-ingestion as a transformation over a plan DataFrame; THIS module
-exposes the same source as a first-class `spark.read.format(...)`
-via the Spark 4 Python DataSource API — the idiomatic end state for
-a custom source: partition planning, schema, and options live behind
+Reference semantics (``src/fetch_historical_trades_nvda.py``):
+S1 pagination, ``stock_tick(symbol, date, limit=24000, skip=N)`` until
+an empty page (``:141-183``, loop ``:344-353``), and the NY weekend
+skip (``:97-99,333-335``). The source is a first-class
+`spark.read.format(...)` (and `readStream`) via the Spark 4 Python
+DataSource API: partition planning, schema, and options live behind
 the reader interface, and the engine schedules one task per
 (symbol, trading day) partition exactly like any file source.
 
@@ -17,17 +18,17 @@ the reader interface, and the engine schedules one task per
 
 `fetch_provider` is a "module:function" import path resolved ON THE
 EXECUTOR (options are strings; callables do not serialize) with the
-same page contract as `fetch_trades`: f(symbol, date_iso, limit,
-skip) -> {"t": [epoch_ms...], "p": [...], "v": [...]} — empty "t"
-ends pagination. No HTTP client ships here (no network in this
-build); `synthetic_fetch` is a deterministic in-repo provider that
+page contract f(symbol, date_iso, limit, skip) -> {"t": [epoch_ms...],
+"p": [...], "v": [...]} — empty "t" ends pagination. No HTTP client
+ships here (no network in this build); `synthetic_fetch` is a deterministic in-repo provider that
 exercises the full pagination path and makes the source usable
 out of the box.
 
 Scale shape: the partition grid is (symbols x weekdays) — thousands
 of independent tasks, each rate-limited to its share of the API
-budget (`calls_per_min / tasks_sharing_budget`, the same static
-split as fetch_trades); retries with exponential backoff per page.
+budget (`calls_per_min / tasks_sharing_budget`, a static split:
+a distributed limiter needs an external token service); retries with
+exponential backoff per page (`sources/rest.py`).
 Reference: src/fetch_historical_trades_nvda.py:96-170 (requests
 loop), :379-381 (per-day process pool).
 """
@@ -154,9 +155,8 @@ class _TickRestReader(DataSourceReader):
         self.opts = o
 
     def partitions(self):
-        # (symbol, weekday) grid — NY weekends dropped, the same plan
-        # trading_day_plan builds declaratively (date is the unit of
-        # parallelism, as in the reference's process pool).
+        # (symbol, weekday) grid — NY weekends dropped (date is the
+        # unit of parallelism, as in the reference's process pool).
         out = []
         d = self.start
         while d <= self.end:

@@ -1,8 +1,8 @@
 """Streaming doc-atomic sequence packing — the stateful streaming twin
-of the batch ``sequence_packing`` query (corpus/clean.py, whose fold is
-the pure-JVM ``operators/jvm_folds.py:packing_scan_sql``): greedy
-first-fit-in-order packing of documents into fixed-capacity context
-windows, per source.
+of the batch ``sequence_packing`` query (corpus/clean.py): the same
+greedy first-fit-in-order packing of documents into fixed-capacity
+context windows, per source, through the same function
+(``operators/scans.py:greedy_pack``).
 
 State per source is O(1) forever: the OPEN bin's id and fill. A
 document's bin assignment is FINAL the moment it is packed (the greedy
@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from auto_trade_data_pipeline_spark.operators.scans import greedy_pack
+
 __all__ = ["streaming_sequence_packing"]
 
 #: Native tuple state: (open bin id, its fill). bin_id 0 == no bin yet.
@@ -65,22 +67,12 @@ def _make_fn(capacity: int):
             return
         batch = batch.sort_values("doc_id", kind="mergesort").reset_index(drop=True)
 
-        rows = []
-        for doc_id, n in zip(batch["doc_id"], batch["n_tokens"], strict=True):
-            n = int(n)
-            # Exactly packing_scan_sql's fold: the first document opens
-            # bin 1; a document that does not fit opens the next bin
-            # (an oversize document occupies a bin alone — doc-atomic,
-            # never split, never dropped).
-            if bin_id == 0 or fill + n > capacity:
-                bin_id += 1
-                fill = n
-            else:
-                fill += n
-            rows.append((source, int(doc_id), n, bin_id))
-
+        bins, bin_id, fill = greedy_pack(batch["n_tokens"], capacity, bin_id, fill)
+        out = batch[["doc_id", "n_tokens"]].astype("int64")
+        out.insert(0, "source", source)
+        out["bin_id"] = bins
         state.update((int(bin_id), int(fill)))
-        yield pd.DataFrame(rows, columns=_OUT_COLS)
+        yield out
 
     return fn
 

@@ -1,11 +1,10 @@
-"""Bit-exact parity: JVM aggregate() scan folds vs the numpy kernels.
+"""The recursive scans through ``operators/scans.py:scan_by_key``.
 
-The round-5 port (operators/jvm_folds.py) moves the EMA-class
-recursions off interpreted Python loops; these tests pin that the JVM
-fold reproduces functions/ta.py EXACTLY (same doubles, no tolerance) —
-NULL on the JVM side corresponds to NaN from the kernels (the Arrow
-boundary always converted NaN to NULL, so this is the contract the
-oracles compare against).
+Each scan must equal its ``functions/ta.py`` kernel run over the
+key's tape in order (same doubles, no tolerance), with the kernel's
+NaN warm-up rows delivered as NULL: that is the contract the DuckDB
+oracles compare against. The packing scan is checked
+against a plain-Python greedy loop written here.
 """
 
 from __future__ import annotations
@@ -17,9 +16,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from auto_trade_data_pipeline_spark.functions import ta
-from auto_trade_data_pipeline_spark.operators import jvm_folds as jf
+from auto_trade_data_pipeline_spark.operators.scans import greedy_pack, scan_by_key
 
 pytestmark = pytest.mark.usefixtures("spark")
+
+_SYMBOLS = (("AAA", 7), ("BBB", 11), ("CCC", 13))
 
 
 def _walk(seed: int, n: int) -> np.ndarray:
@@ -27,17 +28,26 @@ def _walk(seed: int, n: int) -> np.ndarray:
     return np.round(100.0 + np.cumsum(rng.randn(n) * 0.5), 4)
 
 
+def _bars(seed: int, n: int = 257):
+    px = _walk(seed, n)
+    hi = px + np.abs(np.round(np.random.RandomState(seed + 1).rand(n), 4))
+    lo = px - np.abs(np.round(np.random.RandomState(seed + 2).rand(n), 4))
+    op = np.round((hi + lo) / 2.0, 4)
+    return op, hi, lo, px
+
+
 def _df(spark, n=257):
+    """Three symbols of OHLC bars, rows shuffled so the scan must sort.
+    (Scan functions are written inline in each test: Python workers
+    cannot import this module, so they must be pickled by value.)"""
     rows = []
-    for s, seed in (("AAA", 7), ("BBB", 11), ("CCC", 13)):
-        px = _walk(seed, n)
-        hi = px + np.abs(np.round(np.random.RandomState(seed + 1).rand(n), 4))
-        lo = px - np.abs(np.round(np.random.RandomState(seed + 2).rand(n), 4))
-        op = np.round((hi + lo) / 2.0, 4)
+    for s, seed in _SYMBOLS:
+        op, hi, lo, px = _bars(seed, n)
         rows += [
             (s, i, float(op[i]), float(hi[i]), float(lo[i]), float(px[i]))
             for i in range(n)
         ]
+    np.random.RandomState(0).shuffle(rows)
     return spark.createDataFrame(
         rows, "symbol string, i int, open double, high double, low double, close double"
     )
@@ -57,252 +67,153 @@ def _assert_exact(got: dict, symbol: str, expect: np.ndarray):
 
 
 def test_ema_scan_bit_exact(spark):
-    df = _df(spark)
-    out = jf.scan_by_key(
-        df, ["symbol"], "i", ["close"],
-        {"ema12": jf.ema_scan_sql("transform(s, e -> e.close)", 12),
-         "ema26": jf.ema_scan_sql("transform(s, e -> e.close)", 26)},
+    out = scan_by_key(
+        _df(spark), ["symbol"], "i", ["close"],
+        {"ema12": ("double", lambda pdf: ta.ema(pdf["close"].to_numpy(dtype=float), 12)),
+         "ema26": ("double", lambda pdf: ta.ema(pdf["close"].to_numpy(dtype=float), 26))},
     )
+    assert out.columns == ["symbol", "i", "close", "ema12", "ema26"]
     e12 = _pairs(out, "ema12")
     e26 = _pairs(out, "ema26")
-    for s, seed in (("AAA", 7), ("BBB", 11), ("CCC", 13)):
+    for s, seed in _SYMBOLS:
         px = _walk(seed, 257)
         _assert_exact(e12, s, ta.ema(px, 12))
         _assert_exact(e26, s, ta.ema(px, 26))
 
 
-def test_ema_scan_chunk_boundaries_bit_exact(spark):
-    """The chunked scan (O(n·chunk), not O(n²)) must be bit-identical
-    across block boundaries: a tiny chunk size forces many blocks and
-    partial final blocks; results must equal both the kernel and the
-    default-chunk scan."""
-    n = 257  # chunk=16 -> 17 blocks, last block of 1
-    px = _walk(21, n)
-    df = spark.createDataFrame(
-        [("S", i, float(v)) for i, v in enumerate(px)], "symbol string, i int, x double"
-    )
-    arr = "transform(s, e -> e.x)"
-    out = jf.scan_by_key(
-        df, ["symbol"], "i", ["x"],
-        {"tiny": jf.ema_scan_sql(arr, 12, chunk=16),
-         "dflt": jf.ema_scan_sql(arr, 12)},
-    )
-    tiny, dflt = _pairs(out, "tiny"), _pairs(out, "dflt")
-    _assert_exact(tiny, "S", ta.ema(px, 12))
-    assert tiny == dflt
-
-
 def test_ema_scan_leading_nulls(spark):
     """A cascaded EMA input (leading NULLs — the MACD signal shape)
-    starts its warm-up at the first non-null value."""
+    starts its warm-up at the first non-null value; every warm-up row,
+    the NULL prefix included, comes out NULL, never NaN."""
     px = _walk(3, 120)
     vals = [None] * 25 + [float(v) for v in px[25:]]
     df = spark.createDataFrame(
         [("S", i, v) for i, v in enumerate(vals)], "symbol string, i int, x double"
     )
-    out = jf.scan_by_key(
+    out = scan_by_key(
         df, ["symbol"], "i", ["x"],
-        {"e9": jf.ema_scan_sql("transform(s, e -> e.x)", 9)},
+        {"e9": ("double", lambda pdf: ta.ema(pdf["x"].to_numpy(dtype=float), 9))},
     )
     arr = px.copy()
     arr[:25] = np.nan
-    _assert_exact(_pairs(out, "e9"), "S", ta.ema(arr, 9))
+    got = _pairs(out, "e9")
+    _assert_exact(got, "S", ta.ema(arr, 9))
+    assert sum(v is None for v in got.values()) == 25 + 8
 
 
 def test_atr_scan_bit_exact(spark):
-    df = _df(spark)
-    tr_arr = """transform(s, e -> e.high - e.low)"""
-    # true range needs prev close; build it with a zip over the shifted array
-    tr_full = (
-        "zip_with(s, array_insert(slice(s, 1, size(s) - 1), 1, s[0]),"
-        " (cur, prv) -> CASE WHEN cur.i = prv.i THEN cur.high - cur.low"
-        " ELSE greatest(cur.high - cur.low, abs(cur.high - prv.close),"
-        " abs(cur.low - prv.close)) END)"
-    )
-    out = jf.scan_by_key(
-        df, ["symbol"], "i", ["high", "low", "close"],
-        {"atr14": jf.wilder_atr_scan_sql(tr_full, 14)},
+    def atr14(pdf):
+        return ta.atr(*(pdf[c].to_numpy(dtype=float) for c in ("high", "low", "close")), 14)
+
+    out = scan_by_key(
+        _df(spark), ["symbol"], "i", ["high", "low", "close"], {"atr14": ("double", atr14)}
     )
     got = _pairs(out, "atr14")
-    for s, seed in (("AAA", 7), ("BBB", 11), ("CCC", 13)):
-        px = _walk(seed, 257)
-        hi = px + np.abs(np.round(np.random.RandomState(seed + 1).rand(257), 4))
-        lo = px - np.abs(np.round(np.random.RandomState(seed + 2).rand(257), 4))
+    for s, seed in _SYMBOLS:
+        _op, hi, lo, px = _bars(seed)
         _assert_exact(got, s, ta.atr(hi, lo, px, 14))
 
 
 def test_kalman_scan_bit_exact(spark):
-    df = _df(spark)
-    out = jf.scan_by_key(
-        df, ["symbol"], "i", ["close"],
-        {"kx": jf.kalman_scan_sql("transform(s, e -> e.close)", 0.01, 1.0)},
-    )
+    def kx(pdf):
+        return ta.kalman_filter(pdf["close"].to_numpy(dtype=float), 0.01, 1.0)
+
+    out = scan_by_key(_df(spark), ["symbol"], "i", ["close"], {"kx": ("double", kx)})
     got = _pairs(out, "kx")
-    for s, seed in (("AAA", 7), ("BBB", 11), ("CCC", 13)):
-        px = _walk(seed, 257)
-        _assert_exact(got, s, ta.kalman_filter(px, 0.01, 1.0))
+    for s, seed in _SYMBOLS:
+        _assert_exact(got, s, ta.kalman_filter(_walk(seed, 257), 0.01, 1.0))
 
 
 def test_holt_scan_bit_exact(spark):
-    df = _df(spark)
-    scan = jf.holt_scan_sql("transform(s, e -> e.close)", 0.5, 0.3)
-    out = jf.scan_by_key(df, ["symbol"], "i", ["close"], {"hw": scan}).select(
-        "symbol", "i", F.col("hw.l").alias("l"), F.col("hw.b").alias("b")
+    """A struct-typed scan output survives the Arrow dict -> struct
+    conversion bit-exactly."""
+    def hw(pdf):
+        lev, tr = ta.holt_linear(pdf["close"].to_numpy(dtype=float), 0.5, 0.3)
+        return [{"l": float(li), "b": float(bi)} for li, bi in zip(lev, tr)]
+
+    out = scan_by_key(
+        _df(spark), ["symbol"], "i", ["close"], {"hw": ("struct<l: double, b: double>", hw)}
     )
+    assert out.schema["hw"].dataType.simpleString() == "struct<l:double,b:double>"
+    out = out.select("symbol", "i", F.col("hw.l").alias("l"), F.col("hw.b").alias("b"))
     gl, gb = _pairs(out, "l"), _pairs(out, "b")
-    for s, seed in (("AAA", 7), ("BBB", 11), ("CCC", 13)):
-        px = _walk(seed, 257)
-        lvl, trd = ta.holt_linear(px, 0.5, 0.3)
+    for s, seed in _SYMBOLS:
+        lvl, trd = ta.holt_linear(_walk(seed, 257), 0.5, 0.3)
         _assert_exact(gl, s, lvl)
         _assert_exact(gb, s, trd)
 
 
 def test_ha_open_scan_bit_exact(spark):
-    df = _df(spark).withColumn(
-        "hc", F.expr("(open + high + low + close) / 4.0")
-    )
-    bars = (
-        "transform(s, e -> named_struct('o', e.open, 'c', e.close, 'hc', e.hc))"
-    )
-    out = jf.scan_by_key(
-        df, ["symbol"], "i", ["open", "close", "hc"],
-        {"ha_open": jf.ha_open_scan_sql(bars)},
+    def ha_open(pdf):
+        return ta.heikin_ashi(
+            *(pdf[c].to_numpy(dtype=float) for c in ("open", "high", "low", "close"))
+        )[0]
+
+    out = scan_by_key(
+        _df(spark), ["symbol"], "i", ["open", "high", "low", "close"],
+        {"ha_open": ("double", ha_open)},
     )
     got = _pairs(out, "ha_open")
-    for s, seed in (("AAA", 7), ("BBB", 11), ("CCC", 13)):
-        px = _walk(seed, 257)
-        hi = px + np.abs(np.round(np.random.RandomState(seed + 1).rand(257), 4))
-        lo = px - np.abs(np.round(np.random.RandomState(seed + 2).rand(257), 4))
-        op = np.round((hi + lo) / 2.0, 4)
-        ho, _, _, _ = ta.heikin_ashi(op, hi, lo, px)
-        _assert_exact(got, s, ho)
+    for s, seed in _SYMBOLS:
+        _assert_exact(got, s, ta.heikin_ashi(*_bars(seed))[0])
 
 
-def test_shape_routing_numpy_arm_bit_exact(spark):
-    """Round-6 shape routing: above CROSSOVER_ROWS_PER_KEY the numpy
-    kernels run via applyInPandas instead of the interpreted JVM fold
-    — same rows, same doubles, same NULL warm-ups, same schema."""
-    df = _df(spark)
-    scans = {
-        "ema12": jf.ema_scan_sql("transform(s, e -> e.close)", 12),
-        "kx": jf.kalman_scan_sql("transform(s, e -> e.close)", 1e-5, 0.01),
-    }
-    numpy_scans = {
-        "ema12": ("double", lambda pdf: ta.ema(pdf["close"].to_numpy(dtype=float), 12)),
-        "kx": (
-            "double",
-            lambda pdf: ta.kalman_filter(pdf["close"].to_numpy(dtype=float), 1e-5, 0.01),
-        ),
-    }
-    args = (df, ["symbol"], "i", ["close"], scans)
-    jvm = jf.scan_by_key(*args, numpy_scans=numpy_scans,
-                         rows_per_key=jf.CROSSOVER_ROWS_PER_KEY - 1)
-    np_ = jf.scan_by_key(*args, numpy_scans=numpy_scans,
-                         rows_per_key=jf.CROSSOVER_ROWS_PER_KEY)
-    assert [f.name for f in jvm.schema.fields] == [f.name for f in np_.schema.fields]
-    for col in ("ema12", "kx"):
-        assert _pairs(jvm, col) == _pairs(np_, col)
+def test_scan_one_row_tape(spark):
+    """A one-row tape: the EMA is still warming up (NULL), the Kalman
+    level is seeded with the row's own value."""
+    df = spark.createDataFrame([("S", 0, 101.5)], "symbol string, i int, close double")
 
+    def close(pdf):
+        return pdf["close"].to_numpy(dtype=float)
 
-def test_shape_routing_struct_output_bit_exact(spark):
-    """The struct-typed scan output (Holt level+trend) survives the
-    numpy arm's dict->struct Arrow conversion bit-exactly."""
-    df = _df(spark)
-    a, b = 0.3, 0.1
-
-    def hw_np(pdf):
-        lev, tr = ta.holt_linear(pdf["close"].to_numpy(dtype=float), a, b)
-        return [{"l": float(li), "b": float(bi)} for li, bi in zip(lev, tr)]
-
-    args = (
+    out = scan_by_key(
         df, ["symbol"], "i", ["close"],
-        {"hw": jf.holt_scan_sql("transform(s, e -> e.close)", a, b)},
+        {"e5": ("double", lambda pdf: ta.ema(close(pdf), 5)),
+         "kx": ("double", lambda pdf: ta.kalman_filter(close(pdf), 1e-5, 0.01))},
     )
-    kw = dict(numpy_scans={"hw": ("struct<l: double, b: double>", hw_np)})
-    jvm = jf.scan_by_key(*args, **kw, rows_per_key=1)
-    np_ = jf.scan_by_key(*args, **kw, rows_per_key=10**9)
-    jj = {(r["symbol"], r["i"]): (r["hw"]["l"], r["hw"]["b"]) for r in jvm.collect()}
-    nn = {(r["symbol"], r["i"]): (r["hw"]["l"], r["hw"]["b"]) for r in np_.collect()}
-    assert jj == nn
+    assert [tuple(r) for r in out.collect()] == [("S", 0, 101.5, None, 101.5)]
 
 
-def test_scan_sql_binds_input_array_once():
-    """Round-5 advice: the input-array expression must appear exactly
-    once in the compiled scan SQL — spliced into the per-chunk slice()
-    it would be re-evaluated per chunk, O(n²/CHUNK) element work when
-    the input is itself an O(n) transform/zip_with."""
-    arr = "transform(s, e -> e.close)"
-    for sql in (
-        jf.ema_scan_sql(arr, 12),
-        jf.wilder_atr_scan_sql(arr, 14),
-        jf.kalman_scan_sql(arr, 1e-5, 0.01),
-        jf.holt_scan_sql(arr, 0.3, 0.1),
-        jf.ha_open_scan_sql(arr),
-    ):
-        assert sql.count(arr) == 1, "input array expression evaluated per chunk"
-
-
-def test_rows_per_key_estimate_unreadable_layout_warns_not_raises(tmp_path):
-    """Round-6 advice (medium): the estimate is a pure perf routing
-    hint — an unreadable layout (URI scheme, renamed table) must warn
-    and return None (→ the JVM fold arm), never crash query build."""
-    with pytest.warns(RuntimeWarning, match="falling back to the JVM fold"):
-        assert jf.rows_per_key_estimate(str(tmp_path), "events", 5) is None
-    with pytest.warns(RuntimeWarning):
-        assert jf.rows_per_key_estimate("s3a://bucket/prefix", "events", 5) is None
-
-
-def test_rows_per_key_estimate_local_layout(tmp_path):
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    d = tmp_path / "events.parquet"
-    d.mkdir()
-    pq.write_table(pa.Table.from_pandas(pd.DataFrame({"x": range(100)})),
-                   d / "part-0.parquet")
-    assert jf.rows_per_key_estimate(str(tmp_path), "events", 4) == 25
+def _ref_pack(counts, cap):
+    """Independent greedy reference: a bin absorbs items while its
+    fill stays <= cap; an item that does not fit opens the next bin."""
+    out, b, fill = [], 0, 0
+    for c in counts:
+        if b == 0 or fill + c > cap:
+            b, fill = b + 1, c
+        else:
+            fill += c
+        out.append(b)
+    return out
 
 
 def test_packing_scan_greedy_bins(spark):
     """Greedy contiguous packing: bin absorbs while fill <= capacity,
-    oversize items get their own bin, bin ids are 1-based. Python
-    reference recursion vs the JVM fold, including a tape longer than
-    one CHUNK so the blocked scan's carry is exercised."""
+    oversize items get their own bin, bin ids are 1-based."""
     import random
 
     rng = random.Random(7)
-    counts = [rng.randint(1, 40) for _ in range(jf.CHUNK * 2 + 17)]
+    counts = [rng.randint(1, 40) for _ in range(2065)]
     counts[5] = 300  # oversize: > capacity, must sit alone in its bin
     cap = 100
 
-    def ref(cs):
-        out, b, fill = [], 0, 0
-        for c in cs:
-            if b == 0 or fill + c > cap:
-                b, fill = b + 1, c
-            else:
-                fill += c
-            out.append(b)
-        return out
-
     df = spark.createDataFrame(
-        [("K", i, float(c)) for i, c in enumerate(counts)], "k string, i int, n double"
+        [("K", i, c) for i, c in enumerate(counts)], "k string, i int, n long"
     )
-    out = jf.scan_by_key(
-        df, ["k"], "i", ["n"],
-        {"bin": jf.packing_scan_sql("transform(s, e -> e.n)", cap)},
+    out = scan_by_key(
+        df, ["k"], "i", ["n"], {"bin": ("bigint", lambda pdf: greedy_pack(pdf["n"], cap)[0])}
     )
+    assert dict(out.dtypes)["bin"] == "bigint"
     got = [r["bin"] for r in out.orderBy("i").collect()]
-    assert got == ref(counts)
+    assert got == _ref_pack(counts, cap)
     # The oversize item is alone: no neighbor shares its bin.
     assert got.count(got[5]) == 1
 
 
 def test_packing_scan_empty_tape(spark):
-    df = spark.createDataFrame([], "k string, i int, n double")
-    out = jf.scan_by_key(
-        df, ["k"], "i", ["n"],
-        {"bin": jf.packing_scan_sql("transform(s, e -> e.n)", 100)},
+    df = spark.createDataFrame([], "k string, i int, n long")
+    out = scan_by_key(
+        df, ["k"], "i", ["n"], {"bin": ("bigint", lambda pdf: greedy_pack(pdf["n"], 100)[0])}
     )
+    assert out.columns == ["k", "i", "n", "bin"]
     assert out.count() == 0

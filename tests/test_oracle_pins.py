@@ -1,5 +1,6 @@
 """Hash-exact oracle pins for the window families, BPE training, the
-anchor table with its anchored VWAP, and the KMV distinct-count sketch.
+anchor table with its anchored VWAP, the KMV distinct-count sketch and
+the recursive scans.
 
 Each query runs on Spark and on its DuckDB oracle at sf0.001 and must
 agree on column names, row count, render classes (no pandas dtype
@@ -8,8 +9,9 @@ drift) and the order-insensitive value hash — the same comparison
 Together they pin the values of every window-family builder
 (``operators/windows.py``, plain and block-parallel), the BPE pair
 stream, the anchor kernel's points and filled VWAP, the stand-alone
-VWAP fill and the KMV estimate against references written
-independently of them.
+VWAP fill, the KMV estimate, and every ``operators/scans.py`` scan
+(the EMA, Wilder ATR, Heikin-Ashi, Kalman and Holt kernels and
+doc-atomic packing) against references written independently of them.
 """
 
 from __future__ import annotations
@@ -41,6 +43,14 @@ def duck(sf_small):
         "anchored_vwap_filled",
         "anchored_vwap_fill",
         "kmv_distinct_sketch",
+        "ema_recursive",
+        "atr_recursive",
+        "heikin_ashi_candles",
+        "kalman_price_smooth",
+        "holt_winters_smooth",
+        "sequence_packing",
+        "sequence_packing_sharded",
+        "packing_efficiency",
     ],
 )
 def test_query_matches_duckdb_oracle(spark, sf_small, duck, name):

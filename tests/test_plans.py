@@ -768,7 +768,7 @@ def test_round8_queries_broadcast_their_dimension_sides(spark, sf_small):
 
 
 def test_sequence_packing_single_shuffle(spark, sf_small):
-    """Doc-atomic packing is one collect_list per source: exactly one
+    """Doc-atomic packing is one grouped pass per source: exactly one
     shuffle exchange below the scan (plus AQE reads), never a
     SinglePartition collapse."""
     from auto_trade_data_pipeline_spark.corpus import load_all
@@ -784,7 +784,7 @@ def test_round9_queries_plan_shapes(spark, sf_small):
     contamination broadcasts the quantizer/probe dimension sides with
     no cartesian and no SinglePartition funnel (its windows partition
     by eval_id/train_id); packing_efficiency adds only a
-    map-side-combinable source agg on top of the packing fold (no
+    map-side-combinable source agg on top of the packing scan (no
     SinglePartition, no cartesian)."""
     from auto_trade_data_pipeline_spark.corpus import load_all
 

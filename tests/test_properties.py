@@ -458,7 +458,7 @@ _INVARIANCE_QUERIES = [
     # all-symbols hourly grid is EMPTY at sf0.001 — no hour has full
     # coverage there — so it would be a vacuous invariance row.)
     # round-8/9 LLM-pipeline tier: df-threshold boilerplate flagging,
-    # the packing fold (plain, sharded global bin ids, utilization
+    # the packing scan (plain, sharded global bin ids, utilization
     # readout), fixed-order Neyman allocation, LSH-precision cluster
     # audit, IVF-routed semantic decontamination, Morton-interleave
     # layout stats, cluster-keyed leakage-free splitting (all
@@ -720,7 +720,7 @@ def test_cdc_apply_matches_sequential_replay(chg):
 
 
 #: Price walks with an optional leading-NULL prefix (cascaded-EMA
-#: shape) — both scan_by_key arms must agree bit-for-bit on any draw.
+#: shape), one per symbol.
 walk_strategy = st.tuples(
     st.integers(min_value=0, max_value=8),   # leading NULLs
     st.lists(
@@ -731,48 +731,41 @@ walk_strategy = st.tuples(
 )
 
 
-@given(walk_strategy, walk_strategy)
+@given(walk_strategy, walk_strategy, st.randoms(use_true_random=False))
 @_settings
-def test_scan_routing_arms_agree_on_any_tape(wa, wb):
-    """Round-6 shape routing: the JVM aggregate() fold and the numpy
-    applyInPandas kernels are ONE operator with two backends — for
-    any tape (random walk, random leading-NULL warm-up prefix,
-    multiple symbols) every output double and NULL must be identical,
-    so routing can never change results."""
-    from auto_trade_data_pipeline_spark.functions import ta
-    from auto_trade_data_pipeline_spark.operators import jvm_folds as jf
+def test_scan_by_key_equals_kernels_on_any_tape(wa, wb, rnd):
+    """For any tape (random walk, random leading-NULL warm-up prefix,
+    two symbols, rows in any order) ``scan_by_key`` returns each
+    kernel's value over the key's ordered tape, with every NaN warm-up
+    row as NULL."""
+    import math
 
-    rows = []
+    import numpy as np
+
+    from auto_trade_data_pipeline_spark.functions import ta
+    from auto_trade_data_pipeline_spark.operators.scans import scan_by_key
+
+    def close(pdf):
+        return pdf["close"].to_numpy(dtype=float)
+
+    rows, want = [], {}
     for sym, (nulls, vals) in (("A", wa), ("B", wb)):
         seq = [None] * nulls + [float(v) for v in vals]
         rows += [(sym, i, v) for i, v in enumerate(seq)]
+        arr = np.array([np.nan if v is None else v for v in seq])
+        for i, pair in enumerate(zip(ta.ema(arr, 5), ta.kalman_filter(arr, 1e-5, 0.01))):
+            want[(sym, i)] = tuple(None if math.isnan(x) else x for x in pair)
+    rnd.shuffle(rows)
     df = _spark.createDataFrame(rows, "symbol string, i int, close double")
-    scans = {
-        "e5": jf.ema_scan_sql("transform(s, e -> e.close)", 5),
-        "kx": jf.kalman_scan_sql("transform(s, e -> e.close)", 1e-5, 0.01),
-    }
-    numpy_scans = {
-        "e5": ("double", lambda pdf: ta.ema(pdf["close"].to_numpy(dtype=float), 5)),
-        "kx": (
-            "double",
-            lambda pdf: ta.kalman_filter(pdf["close"].to_numpy(dtype=float), 1e-5, 0.01),
-        ),
-    }
-    args = (df, ["symbol"], "i", ["close"], scans)
-    jvm = {
-        (r["symbol"], r["i"]): (r["e5"], r["kx"])
-        for r in jf.scan_by_key(*args, numpy_scans=numpy_scans, rows_per_key=1).collect()
-    }
-    np_ = {
-        (r["symbol"], r["i"]): (r["e5"], r["kx"])
-        for r in jf.scan_by_key(
-            *args, numpy_scans=numpy_scans, rows_per_key=10**9
-        ).collect()
-    }
-    assert jvm == np_
+    out = scan_by_key(
+        df, ["symbol"], "i", ["close"],
+        {"e5": ("double", lambda pdf: ta.ema(close(pdf), 5)),
+         "kx": ("double", lambda pdf: ta.kalman_filter(close(pdf), 1e-5, 0.01))},
+    )
+    assert {(r["symbol"], r["i"]): (r["e5"], r["kx"]) for r in out.collect()} == want
 
 
-#: Token-count tapes for the packing fold: including zeros (empty
+#: Token-count tapes for the packing scan: including zeros (empty
 #: docs), counts at exactly the capacity, and oversize items.
 pack_strategy = st.lists(
     st.sampled_from([0, 1, 7, 40, 99, 100, 101, 300]),
@@ -784,22 +777,30 @@ pack_strategy = st.lists(
 @given(counts=pack_strategy)
 @_settings
 def test_packing_invariants(counts):
-    """For every tape: bin ids start at 1 and are non-decreasing with
-    steps of exactly 1; every bin's fill is <= capacity unless the
-    bin holds a single oversize item; no bin is empty."""
-    from auto_trade_data_pipeline_spark.operators import jvm_folds as jf
+    """For every tape the packing scan equals a plain greedy loop
+    written here, and: bin ids start at 1 and are non-decreasing with
+    steps of exactly 1; every bin's fill is <= capacity unless the bin
+    holds a single oversize item; no bin is empty."""
+    from auto_trade_data_pipeline_spark.operators.scans import greedy_pack, scan_by_key
 
     cap = 100
     df = _spark.createDataFrame(
-        [("K", i, float(c)) for i, c in enumerate(counts)],
-        "k string, i int, n double",
+        [("K", i, c) for i, c in enumerate(counts)],
+        "k string, i int, n long",
     )
-    out = jf.scan_by_key(
-        df, ["k"], "i", ["n"],
-        {"bin": jf.packing_scan_sql("transform(s, e -> e.n)", cap)},
+    out = scan_by_key(
+        df, ["k"], "i", ["n"], {"bin": ("bigint", lambda pdf: greedy_pack(pdf["n"], cap)[0])}
     )
     rows = out.orderBy("i").collect()
     bins = [r["bin"] for r in rows]
+    ref, b, fill = [], 0, 0
+    for c in counts:
+        if b == 0 or fill + c > cap:
+            b, fill = b + 1, c
+        else:
+            fill += c
+        ref.append(b)
+    assert bins == ref
     assert bins[0] == 1
     assert all(b2 - b1 in (0, 1) for b1, b2 in zip(bins, bins[1:]))
     fills: dict[int, list[int]] = {}

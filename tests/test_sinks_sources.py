@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from datetime import date, datetime
+from datetime import datetime
 
 import pytest
 
@@ -18,12 +18,7 @@ from auto_trade_data_pipeline_spark.sinks import (
     write_split,
     write_upsert_snapshot,
 )
-from auto_trade_data_pipeline_spark.sources.rest import (
-    RateLimiter,
-    fetch_trades,
-    trading_day_plan,
-    with_retry,
-)
+from auto_trade_data_pipeline_spark.sources.rest import RateLimiter, with_retry
 
 TICKS = "symbol string, timestamp timestamp, price double, volume double, tick_id long"
 
@@ -173,31 +168,6 @@ def test_with_retry_backoff_then_raises():
     with pytest.raises(RuntimeError):
         with_retry(always, max_attempts=3, sleep=sleeps.append)
     assert sleeps[-2:] == [1.0, 2.0]
-
-
-def test_trading_day_plan_drops_weekends(spark):
-    plan = trading_day_plan(spark, ["NVDA"], date(2024, 1, 5), date(2024, 1, 9))
-    days = sorted(str(r["date"]) for r in plan.collect())
-    # Fri 5th, Mon 8th, Tue 9th — the 6th/7th weekend dropped.
-    assert days == ["2024-01-05", "2024-01-08", "2024-01-09"]
-
-
-def test_fetch_trades_paginates_with_fake_client(spark):
-    pages = {}
-
-    def fake_fetch(symbol, date_iso, limit, skip):
-        pages.setdefault((symbol, date_iso), 0)
-        pages[(symbol, date_iso)] += 1
-        if skip >= 4:
-            return {"t": [], "p": [], "v": []}
-        base = 1_704_207_600_000 + skip * 1000
-        return {"t": [base, base + 500], "p": [10.0 + skip, 11.0 + skip], "v": [1.0, 2.0]}
-
-    plan = trading_day_plan(spark, ["NVDA"], date(2024, 1, 2), date(2024, 1, 2))
-    out = fetch_trades(plan, fetch_fn=fake_fetch, batch_size=2).collect()
-    assert len(out) == 4  # two pages of two rows, then the empty page
-    assert {r["symbol"] for r in out} == {"NVDA"}
-    assert sorted(r["tick_id"] for r in out) == [0, 1, 2, 3]
 
 
 def test_asof_join_property_vs_bruteforce(spark):
@@ -393,27 +363,6 @@ def test_trade_rest_pagination_invariant(spark):
 
     assert rows(7) == rows(1000)
     assert len(rows(7)) == 100
-
-
-def test_trade_rest_matches_mapinpandas_fetch(spark):
-    """The DataSource form and the mapInPandas fetch_trades form must
-    produce the same ticks from the same provider."""
-    import datetime as dt
-
-    from auto_trade_data_pipeline_spark.sources.pyds import synthetic_fetch
-    from auto_trade_data_pipeline_spark.sources.rest import fetch_trades, trading_day_plan
-
-    _register_trade_rest(spark)
-    ds = (
-        spark.read.format("trade_rest")
-        .option("symbols", "NVDA")
-        .option("start", "2024-01-08")
-        .option("end", "2024-01-09")
-        .load()
-    )
-    plan = trading_day_plan(spark, ["NVDA"], dt.date(2024, 1, 8), dt.date(2024, 1, 9))
-    mp = fetch_trades(plan, fetch_fn=synthetic_fetch)
-    assert sorted(map(tuple, ds.collect())) == sorted(map(tuple, mp.collect()))
 
 
 def test_trade_rest_missing_options_fail_loudly(spark):
